@@ -1,8 +1,7 @@
-"""get-log/clear-log, in-place sink, skew salting."""
+"""get-log/clear-log, in-place sink."""
 
 from pyspark.sql import functions as F
 
-from xidel_spark.crawl.skew import detect_hot_keys, salted_repartition
 from xidel_spark.extract.changelog import clear_log, get_log
 from xidel_spark.io.inplace import write_inplace
 
@@ -30,28 +29,6 @@ def test_inplace_overwrite_of_source(spark, tmp_path):
     write_inplace(df, p)  # overwriting the path we're reading from
     back = spark.read.parquet(p)
     assert back.count() == 5 and back.agg(F.max("id")).collect()[0][0] == 4
-
-
-def test_skew_salting_balances(spark):
-    rows = [("hot.com", f"http://hot.com/{i}") for i in range(900)] + [
-        (f"h{i}.com", f"http://h{i}.com/x") for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, "host string, url string")
-    hot = detect_hot_keys(df, "host", 0.1)
-    assert hot == ["hot.com"]
-    # AQE would coalesce these tiny test partitions right back — disable it
-    # here; at real sizes AQE keeps them (and this salting is its input)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        salted = salted_repartition(df, "host", hot, factor=8)
-        sizes = [
-            r["n"] for r in salted.groupBy(F.spark_partition_id().alias("p"))
-            .agg(F.count(F.lit(1)).alias("n")).collect()
-        ]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # without salting one partition would hold >=900 rows
-    assert max(sizes) < 500
 
 
 def test_crawl_query_determinism(spark):

@@ -55,7 +55,7 @@ def test_streaming_continuous_crawl_matches_batch(spark, tmp_path):
     seeds_dir.mkdir()
     (seeds_dir / "b1.json").write_text('{"url": "u0", "seed_idx": 0}\n')
     (seeds_dir / "b2.json").write_text('{"url": "u1", "seed_idx": 1}\n{"url": "u0", "seed_idx": 2}\n')
-    cc = ContinuousCrawl(spark, links, partition_by_host=False)
+    cc = ContinuousCrawl(spark, links)
     cc.run_from_files(str(seeds_dir))
     stream_seen = {r["url"] for r in cc.seen.collect()}
     batch = crawl_waves(spark, links, ["u0", "u1"])

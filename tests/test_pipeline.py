@@ -1,8 +1,9 @@
 """Context-chaining pipelines vs the reference goldens tfe/tef/tefe."""
 
 import pytest
+from test_crawl_properties import GRAPHS, SEEDS
 
-from xidel_spark.corpus import fixture_graph
+from xidel_spark.corpus import FIXTURE, fixture_graph
 from xidel_spark.crawl.pipeline import Stage, run_pipeline
 
 
@@ -140,3 +141,74 @@ def test_recursing_stage_no_frontier_collect(spark, docs, monkeypatch):
     vals = [r["value"] for r in real_collect(out.select("value"))]
     assert vals == ["AAA", "BBB", "B1", "B2", "CCC", "C1", "C2"]
     assert url_collects == [], f"frontier collected on driver: {url_collects}"
+
+
+def _sequential_chain(link_map, titles, seeds, stages):
+    """Sequential replay of an unbracketed -f/-e chain: every document runs
+    the remaining action suffix depth-first — its stage's extractions,
+    then its follows, each enqueued unless ANY stage enqueued it before
+    (one global dup list) and processed fully before its later siblings.
+    All seeds are enqueued before the first is processed."""
+    seen, out = set(), []
+
+    def enqueue(urls):
+        kept = [u for u in dict.fromkeys(urls) if u not in seen]
+        seen.update(kept)
+        return kept
+
+    def process(url, s):
+        for sel in stages[s].extract:
+            if url in titles:
+                out.append((url, s, sel, titles[url]))
+        if stages[s].follow is not None and s + 1 < len(stages):
+            for child in enqueue(link_map.get(url, [])):
+                process(child, s + 1)
+
+    for url in enqueue(seeds):
+        process(url, 0)
+    return out
+
+
+def _docs_of(spark, link_map):
+    """A documents table for a link map: each node titled by its upper-cased
+    name, its links as //a spans in document order."""
+    from xidel_spark.schemas import DOCUMENTS
+
+    nodes = sorted(set(link_map) | {d for ds in link_map.values() for d in ds})
+    rows = [
+        (u, [("title", u.upper(), None, 0)]
+         + [("link", d, d, i + 1) for i, d in enumerate(link_map.get(u, []))],
+         u, "text/html", {"status": "200"}, "html")
+        for u in nodes
+    ]
+    return spark.createDataFrame(rows, DOCUMENTS)
+
+
+CHAINS = {
+    # nest9a: a.xml -f //a -e //title -f //a -e //title
+    "f_ef_e": [Stage(follow="//a"), Stage(extract=["//title"], follow="//a"),
+               Stage(extract=["//title"])],
+    "ef_ef_ef_e": [Stage(extract=["//title"], follow="//a")] * 3 + [Stage(extract=["//title"])],
+}
+
+
+@pytest.mark.parametrize("chain", sorted(CHAINS))
+@pytest.mark.parametrize("name", ["fixture"] + sorted(GRAPHS))
+def test_dfs_pipeline_matches_sequential_chain(spark, docs, name, chain):
+    """run_pipeline_dfs print order == the sequential chain evaluator, on
+    the fixture graph and the crawl property graphs (offline stand-in for
+    the nest9a/b/c reference goldens)."""
+    from xidel_spark.crawl.pipeline import run_pipeline_dfs
+
+    stages = CHAINS[chain]
+    if name == "fixture":
+        link_map = {doc: links for doc, _, links, _ in FIXTURE}
+        titles = {doc: title for doc, title, _, _ in FIXTURE}
+        seeds, graph_docs = ["a.xml"], docs
+    else:
+        link_map = GRAPHS[name]
+        seeds, graph_docs = SEEDS.get(name, ["a"]), _docs_of(spark, link_map)
+        titles = {r["doc_id"]: r["doc_id"].upper() for r in graph_docs.select("doc_id").collect()}
+    out = run_pipeline_dfs(spark, graph_docs, seeds, stages)
+    got = [(r["url"], r["stage"], r["selector"], r["value"]) for r in out.orderBy("ord").collect()]
+    assert got == _sequential_chain(link_map, titles, seeds, stages)

@@ -205,3 +205,43 @@ def test_curation_ops_plan_shape(spark):
     assert "EvalPython" not in plan
     assert "BroadcastExchange" in plan  # benchmark side broadcasts
     assert "SortMergeJoin" not in plan  # membership join never shuffles docs
+
+
+def test_wave_loop_join_strategies(spark, monkeypatch):
+    """the loop joins' physical strategies on a small (statically planned,
+    AQE-off) crawl: the crawler broadcasts the frontier into the expansion
+    and hash-joins the seen side for dedup — never a sort-merge join,
+    which would sort the whole seen set every wave — and crawl_exact
+    broadcasts best into every relaxation. Spies on localCheckpoint the
+    way test_recursing_stage_no_frontier_collect spies on collect."""
+    import re
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from xidel_spark.crawl.crawler import FrontierCrawler
+    from xidel_spark.crawl.engine import crawl_exact
+
+    real = DataFrame.localCheckpoint
+    plans = []
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    links = spark.createDataFrame(
+        [(f"u{i}", k, f"u{(3 * i + k + 1) % 30}") for i in range(30) for k in range(2)],
+        "src string, idx int, dst string",
+    )
+    FrontierCrawler(spark, links).run(["u0"])
+    crawl_exact(spark, links, ["u0"])
+    expand = re.compile(r"BroadcastHashJoin \[url#\d+\], \[src#\d+\], Inner, BuildLeft")
+    dedup = re.compile(r"ShuffledHashJoin \[url#\d+\], \[url#\d+\], LeftOuter, BuildRight")
+    waves = [p for p in plans if "CollectMetrics crawl_w" in p]
+    relax = [p for p in plans if "CollectMetrics relax_" in p]
+    assert waves and relax
+    for p in waves:
+        assert expand.search(p) and dedup.search(p), p
+        assert "SortMergeJoin" not in p, p
+    for p in relax:
+        assert expand.search(p), p

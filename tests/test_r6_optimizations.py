@@ -5,6 +5,7 @@ physical plan; these pin that claim at unit scale (the DuckDB gates pin
 it at corpus scale).
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 import xidel_spark.crawl.bloom as bl
@@ -75,7 +76,8 @@ def test_sized_loop_restores_confs_on_exception(spark):
     parts0 = spark.conf.get("spark.sql.shuffle.partitions")
     aqe0 = spark.conf.get("spark.sql.adaptive.enabled", "true")
     try:
-        with _sized_loop(spark, 10):
+        with _sized_loop(spark) as size:
+            assert size(10)
             assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
             assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
             raise RuntimeError("boom")
@@ -85,9 +87,36 @@ def test_sized_loop_restores_confs_on_exception(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
 
 
+def test_crawler_restores_confs_when_a_wave_raises(spark, tmp_path, monkeypatch):
+    """a FrontierCrawler.run that dies mid-wave (here: the wave-1 store
+    commit) must leave the session's shuffle/AQE confs as it found them."""
+    from xidel_spark.crawl.checkpoint import CrawlStateStore
+    from xidel_spark.crawl.crawler import FrontierCrawler
+
+    links = spark.createDataFrame(
+        [(f"u{i}", 0, f"u{(i + 1) % 10}") for i in range(10)], "src string, idx int, dst string"
+    )
+    store = CrawlStateStore(str(tmp_path / "st"))
+    commit = store.commit
+
+    def failing_commit(wave, frontier, metrics):
+        if wave >= 1:
+            raise RuntimeError("commit failed")
+        return commit(wave, frontier, metrics)
+
+    monkeypatch.setattr(store, "commit", failing_commit)
+    parts0 = spark.conf.get("spark.sql.shuffle.partitions")
+    aqe0 = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    with pytest.raises(RuntimeError, match="commit failed"):
+        FrontierCrawler(spark, links, store=store).run(["u0"])
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts0
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
+
+
 def test_crawler_host_partition_auto_equals_forced(spark):
-    """partition_by_host='auto' (off when politeness is off) must leave the
-    crawl results and per-wave metrics identical to the forced layout."""
+    """host partitioning (on iff politeness is on, wait_ms > 0) must leave
+    the crawl results and per-wave metrics identical to the crawl without
+    it."""
     from xidel_spark.crawl.crawler import FrontierCrawler
 
     links = spark.createDataFrame(
@@ -96,12 +125,12 @@ def test_crawler_host_partition_auto_equals_forced(spark):
         "src string, idx int, dst string",
     ).localCheckpoint(eager=True)
     seeds = ["http://h0.test/p0", "http://h1.test/p1"]
-    auto = FrontierCrawler(spark, links).run(seeds)
-    forced = FrontierCrawler(spark, links, partition_by_host=True).run(seeds)
-    assert auto.waves == forced.waves
-    assert [m["enqueued"] for m in auto.metrics] == [m["enqueued"] for m in forced.metrics]
-    a = auto.seen.select("url")
-    f = forced.seen.select("url")
+    plain = FrontierCrawler(spark, links).run(seeds)
+    polite = FrontierCrawler(spark, links, wait_ms=250).run(seeds)
+    assert plain.waves == polite.waves
+    assert [m["enqueued"] for m in plain.metrics] == [m["enqueued"] for m in polite.metrics]
+    a = plain.seen.select("url")
+    f = polite.seen.select("url")
     assert a.exceptAll(f).count() == 0 and f.exceptAll(a).count() == 0
 
 

@@ -41,7 +41,7 @@ n = {n_nodes}
 links = B.bench_corpus_links(spark, n).localCheckpoint(eager=True)
 seeds = B.bench_seeds(spark, n)
 t0 = time.time()
-run = FrontierCrawler(spark, links, max_depth=6, partition_by_host=False).run(seeds)
+run = FrontierCrawler(spark, links, max_depth=6).run(seeds)
 el = time.time() - t0
 sched = sum(m["candidates"] for m in run.metrics) + run.seen.count()
 print(json.dumps({{"cpus": cpus, "elapsed_sec": round(el, 2),

@@ -8,10 +8,14 @@ frontier wave → robots filter (broadcast rule join) → link expansion
 pre-filter → exact anti-join vs seen → politeness-scheduled new frontier →
 checkpoint (frontier + seen + bloom + lineage metrics) → next wave.
 
-Partitioning: the frontier is hash-partitioned by host (politeness bucket
-== shuffle partition), candidates shuffle once on url for the dedup
-aggregate, and the anti-join's seen side is partitioned the same way so
-AQE can plan it shuffle-free or skew-split it.
+The expansion and the loop sizing are engine.py's (`_expand`,
+`_sized_loop`), shared with the exact engines.
+
+Partitioning: with politeness on (wait_ms > 0) the frontier is
+hash-partitioned by host (politeness bucket == shuffle partition);
+candidates shuffle once on url for the dedup aggregate, and the
+anti-join's seen side is partitioned the same way so AQE can plan it
+shuffle-free or skew-split it.
 
 Resume: constructing a crawler over a store with committed waves continues
 from the latest snapshot; a crawl killed mid-wave re-runs only that wave
@@ -20,27 +24,33 @@ from the latest snapshot; a crawl killed mid-wave re-runs only that wave
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..urlnorm import host_of
 from ..util import checkpoint_reset_stats
-from .bloom import build_bloom, split_candidates
-from .bucketed import BucketedTable
+from .bloom import ShardedBloom, build_bloom, split_candidates
 from .checkpoint import CrawlStateStore
-from .engine import UNLIMITED, _seeds_df
-from .order import seg
+from .engine import FANOUT_GUESS, UNLIMITED, CrawlResult, _expand, _seeds_df, _sized_loop
+from .politeness import host_watermark, politeness_schedule
 from .robots import apply_robots
 
 
-@dataclass
-class CrawlRun:
-    seen: DataFrame
-    frontier: DataFrame
-    waves: int
-    metrics: list[dict] = field(default_factory=list)
+def _expected_rows(metrics: list[dict]) -> int:
+    """Rows the next wave's dedup join handles, from the previous wave's
+    metrics (metrics[-1]): its enqueued count is the live frontier size
+    and candidates/enqueued its observed fanout. The join's BIG side is
+    the seen table (its whole right side shuffles every wave), so this is
+    max(expected candidates, |seen|) — sizing by candidates alone
+    funnelled the 1M-row seen sort through one task at the tail."""
+    fan, fresh = FANOUT_GUESS, 1
+    if metrics:
+        fresh = metrics[-1].get("enqueued") or 1
+        if metrics[-1].get("candidates"):
+            fan = max(1.0, metrics[-1]["candidates"] / fresh)
+    return int(max(1, fresh * fan, sum(m["enqueued"] for m in metrics)))
 
 
 class FrontierCrawler:
@@ -55,23 +65,7 @@ class FrontierCrawler:
         max_depth: int = UNLIMITED,
         use_bloom: bool | str = "auto",
         bloom_shards: int = 16,
-        partition_by_host: bool | str = "auto",
-        bucketed: bool = False,
-        n_buckets: int = 32,
-        state_prefix: str = "xs",
-        broadcast_frontier_max: int = 2_000_000,
     ):
-        self.broadcast_frontier_max = broadcast_frontier_max
-        # 'auto' (r6): the host repartition exists so politeness buckets ==
-        # shuffle partitions; with wait_ms=0 nothing consumes that layout
-        # and the extra per-wave exchange of the whole fresh frontier is
-        # pure cost (guide §2.4 — measured 0.12 s/wave at 1M nodes).
-        if partition_by_host == "auto":
-            partition_by_host = wait_ms > 0
-        self.partition_by_host = partition_by_host
-        self.bucketed = bucketed
-        self.n_buckets = n_buckets
-        self.state_prefix = state_prefix
         self.spark = spark
         self.links = links.select(
             F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst")
@@ -106,17 +100,59 @@ class FrontierCrawler:
             self._bloom_active = True
         return self._bloom_active
 
-    def _seen_join_side(self, seen: DataFrame) -> DataFrame:
-        """seen table prepared for the per-wave dedup left-join. On
-        statically-planned waves (AQE off) the planner would pick a
-        sort-merge join — sorting the whole seen side every wave — so the
-        join is hinted SHUFFLE_HASH: per-partition builds are bounded by
-        the wave sizing (~rows_per_part entries). Big AQE waves are left to
-        the runtime SMJ→SHJ conversion, which checks actual sizes."""
-        side = seen.withColumn("__seen", F.lit(True))
-        if getattr(self, "_wave_static", False):
-            side = side.hint("SHUFFLE_HASH")
-        return side
+    def _grow_bloom(
+        self, bloom: ShardedBloom | None, seen: DataFrame, frontier: DataFrame,
+        seen_count: int, last_fresh: int,
+    ) -> ShardedBloom:
+        """The Bloom filter over `seen`, sized from the OBSERVED seen count
+        (exact, from wave metrics): rebuilt at 4x when the count outgrows
+        capacity, otherwise extended INCREMENTALLY — only the previous
+        wave's fresh urls are hashed and OR-merged, O(increment + filter),
+        never O(seen)."""
+        if bloom is None or seen_count > 0.7 * bloom.capacity:
+            old = bloom
+            bloom = build_bloom(
+                seen,
+                capacity=max(1_000_000, 4 * seen_count),
+                n_shards=self.bloom_shards,
+                approx_rows=seen_count,
+            )
+            if old is not None:
+                old.unpersist()
+            return bloom
+        inc = build_bloom(
+            frontier.select("url"),
+            capacity=bloom.capacity,
+            n_shards=self.bloom_shards,
+            eager=False,
+            approx_rows=last_fresh,
+        )
+        merged = bloom.merge(inc)
+        bloom.unpersist()
+        return merged
+
+    def _with_host(self, fresh: DataFrame, watermark: DataFrame | None) -> DataFrame:
+        """The new frontier's host column. With politeness on, also the
+        earliest allowed fetch time per host bucket (a window over the host
+        partition about to be created); the watermark offsets each host
+        past its previous wave's last fetch, so spacing holds across the
+        wave boundary too. Only politeness consumes the host partitioning:
+        without it the repartition is a pure-cost exchange of the whole
+        fresh frontier (guide §2.4 — 0.12 s/wave at 1M nodes)."""
+        if self.wait_ms > 0:
+            return politeness_schedule(
+                fresh, wait_ms=self.wait_ms, watermark=watermark
+            ).repartition(F.col("host"))
+        return fresh.withColumn("host", host_of(F.col("url")))
+
+    def _advance_watermark(self, frontier: DataFrame, watermark: DataFrame | None) -> DataFrame:
+        """(host, last_ms) folded with the frontier's scheduled fetches."""
+        new_watermark = host_watermark(
+            frontier.select("host", "scheduled_ms"), watermark
+        ).localCheckpoint(eager=True)
+        if watermark is not None:
+            watermark.unpersist()
+        return new_watermark
 
     def _filter_robots(self, cand: DataFrame) -> tuple[DataFrame, int]:
         if self.robots_rules is None:
@@ -129,39 +165,20 @@ class FrontierCrawler:
         blocked = cand.count() - kept.count()
         return kept, blocked
 
-    def run(self, seeds: list[str] | DataFrame, *, max_waves: int = 10_000) -> CrawlRun:
+    def run(self, seeds: list[str] | DataFrame, *, max_waves: int = 10_000) -> CrawlResult:
         spark = self.spark
-        start_wave = 0
-        metrics: list[dict] = []
-        seen_table = None
-        if self.bucketed:
-            # shuffle-stable state: links bucketed by src (expansion join
-            # shuffles only the frontier), seen bucketed by url (dedup join
-            # shuffles only the candidates). Iceberg bucket(N, col) on a
-            # real cluster.
-            links_table = BucketedTable(
-                spark, f"{self.state_prefix}_links", "src", self.n_buckets
-            )
-            links_table.overwrite(self.links)
-            self.links = links_table.df()
-            seen_table = BucketedTable(
-                spark, f"{self.state_prefix}_seen", "url", self.n_buckets
-            )
         watermark = None  # per-host last scheduled_ms carried ACROSS waves
         snap = self.store.load(spark) if self.store else None
         if snap is not None:
             frontier = snap.frontier.localCheckpoint(eager=True)
             seen = snap.seen  # union of committed increments (never rewritten)
-            start_wave = snap.wave + 1
+            wave = snap.wave + 1
             metrics = [m["metrics"] for m in self.store.manifests()]
-            if seen_table is not None:
-                seen_table.overwrite(seen)
+            increments = self.store.increments(spark, snap.wave)
             if self.wait_ms > 0:
                 # rebuild the politeness watermark from committed waves so
                 # the >= wait spacing survives a kill/resume boundary
-                from .politeness import host_watermark
-
-                for inc in self.store.increments(spark, snap.wave):
+                for inc in increments:
                     if "scheduled_ms" in inc.columns:
                         watermark = host_watermark(
                             inc.select("host", "scheduled_ms"), watermark
@@ -171,227 +188,95 @@ class FrontierCrawler:
         else:
             frontier = _seeds_df(spark, seeds, dedup=True)
             frontier, blocked = self._filter_robots(frontier)
-            if self.wait_ms > 0:
-                # seeds are fetches too: schedule wave 0 so the cross-wave
-                # watermark starts at the seeds' last per-host fetch
-                from .politeness import politeness_schedule
-
-                frontier = politeness_schedule(frontier, wait_ms=self.wait_ms)
-            else:
-                frontier = frontier.withColumn("host", host_of(F.col("url")))
-            if self.partition_by_host:
-                frontier = frontier.repartition(F.col("host"))
-            frontier = checkpoint_reset_stats(frontier)
+            # seeds are fetches too: schedule wave 0 so the cross-wave
+            # watermark starts at the seeds' last per-host fetch
+            frontier = checkpoint_reset_stats(self._with_host(frontier, None))
             seen = frontier.select("url")
-            if seen_table is not None:
-                seen_table.overwrite(frontier.select("url"))
+            increments = [frontier]
             m = {"wave": 0, "candidates": 0, "deduped": 0, "robots_blocked": blocked,
                  "enqueued": frontier.count()}
-            metrics.append(m)
+            metrics = [m]
             if self.wait_ms > 0:
-                from .politeness import host_watermark
-
-                watermark = host_watermark(
-                    frontier.select("host", "scheduled_ms")
-                ).localCheckpoint(eager=True)
+                watermark = self._advance_watermark(frontier, watermark)
             if self.store:
                 self.store.commit(0, frontier, m)
-            start_wave = 1
+            wave = 1
 
         bloom = None
-        wave = start_wave
-        last_fresh = metrics[-1]["enqueued"] if metrics else None
-        import time as _time
-
-        # scale-adaptive per-wave physical sizing (r6, guide §2): the wave
-        # loop's volume is KNOWN (exact per-wave counts ride the metrics),
-        # so partition counts are derived from the expected candidate rows
-        # instead of a session-wide constant, and AQE — whose per-query
-        # stage re-planning measured ~0.5 s/wave of pure driver latency at
-        # 1M nodes — stays on only for waves big enough to need runtime
-        # coalescing/skew handling. All thresholds conf-overridable; the
-        # plan shapes are identical, only partition counts change.
-        conf = spark.conf
-        base_parts = int(conf.get("spark.sql.shuffle.partitions"))
-        aqe_orig = conf.get("spark.sql.adaptive.enabled", "true")
-        rows_per_part = int(conf.get("xidel.crawl.waveRowsPerPartition", "50000"))
-        aqe_min = int(conf.get("xidel.crawl.aqeMinCandidates", "5000000"))
-        fanout_guess = float(conf.get("xidel.crawl.fanoutGuess", "4"))
-
-        def _wave_sizing() -> None:
-            # metrics is mutated in place by the wave loop, so metrics[-1]
-            # is always the PREVIOUS wave: its enqueued count is the live
-            # frontier size and candidates/enqueued its observed fanout.
-            # The dedup join's BIG side is the seen table (its whole right
-            # side shuffles every wave), so partitions are sized by
-            # max(expected candidates, |seen|) — sizing by candidates alone
-            # funnelled the 1M-row seen sort through one task at the tail.
-            fan, fresh = fanout_guess, 1
-            if metrics:
-                fresh = metrics[-1].get("enqueued") or 1
-                if metrics[-1].get("candidates"):
-                    fan = max(1.0, metrics[-1]["candidates"] / fresh)
-            seen_now = sum(m["enqueued"] for m in metrics)
-            expected = int(max(1, fresh * fan, seen_now))
-            parts = min(base_parts, max(1, -(-expected // rows_per_part)))
-            conf.set("spark.sql.shuffle.partitions", str(parts))
-            self._wave_static = expected <= aqe_min
-            conf.set(
-                "spark.sql.adaptive.enabled",
-                "false" if self._wave_static else "true",
-            )
-
-        try:
-            return self._run_waves(
-                spark, wave, max_waves, metrics, seen, seen_table, frontier,
-                watermark, bloom, last_fresh, _wave_sizing, _time,
-            )
-        finally:
-            conf.set("spark.sql.shuffle.partitions", str(base_parts))
-            conf.set("spark.sql.adaptive.enabled", aqe_orig)
-
-    def _run_waves(
-        self, spark, wave, max_waves, metrics, seen, seen_table, frontier,
-        watermark, bloom, last_fresh, _wave_sizing, _time,
-    ) -> CrawlRun:
-        while wave < max_waves and wave <= self.max_depth:
-            _wave_t0 = _time.time()
-            _wave_sizing()
-            # expansion join: the frontier is usually small relative to the
-            # link table — broadcast it so links never reshuffle (falls back
-            # to a shuffle join automatically when the frontier grows). Only
-            # the columns the expansion needs are broadcast (url/rank/depth
-            # — not host/scheduled_ms; guide §2.3).
-            fslim = frontier.select("url", "rank", "depth")
-            frontier_side = (
-                F.broadcast(fslim)
-                if last_fresh is not None and last_fresh <= self.broadcast_frontier_max
-                else fslim
-            )
-            cand = (
-                frontier_side.join(self.links, fslim.url == self.links.src)
-                .groupBy(self.links.dst)
-                .agg(F.min(F.struct("rank", "idx", "depth")).alias("m"))
-                .select(
-                    F.col("dst").alias("url"),
-                    F.concat(F.col("m.rank"), seg(F.col("m.idx"))).alias("rank"),
-                    (F.col("m.depth") + 1).alias("depth"),
-                )
-            )
-            cand, robots_blocked = self._filter_robots(cand)
-            seen_count_now = sum(m["enqueued"] for m in metrics)
-            if self._bloom_this_wave(seen_count_now, last_fresh):
-                # Bloom pre-filter: definitely-new candidates skip the
-                # exact join; only maybe-seen get the flag lookup. Sized
-                # from the OBSERVED seen count (exact, from wave metrics);
-                # rebuilt at 4x when the count outgrows capacity, otherwise
-                # extended INCREMENTALLY: only the previous wave's fresh
-                # urls are hashed and OR-merged — O(increment + filter),
-                # never O(seen).
-                seen_count = seen_count_now
-                if bloom is None or seen_count > 0.7 * bloom.capacity:
-                    old = bloom
-                    bloom = build_bloom(
-                        seen,
-                        capacity=max(1_000_000, 4 * seen_count),
-                        n_shards=self.bloom_shards,
-                        approx_rows=seen_count,
-                    )
-                    if old is not None:
-                        old.unpersist()
+        last_fresh = metrics[-1]["enqueued"]
+        with _sized_loop(spark) as size:
+            while wave < max_waves and wave <= self.max_depth:
+                wave_t0 = time.time()
+                seen_count = sum(m["enqueued"] for m in metrics)
+                # the dedup join's seen side: on statically planned waves
+                # (AQE off) the planner would pick a sort-merge join —
+                # sorting the whole seen side every wave — so it is hinted
+                # SHUFFLE_HASH; per-partition builds are bounded by the
+                # wave sizing. Big AQE waves are left to the runtime
+                # SMJ→SHJ conversion, which checks actual sizes.
+                seen_side = seen.withColumn("__seen", F.lit(True))
+                if size(_expected_rows(metrics)):
+                    seen_side = seen_side.hint("SHUFFLE_HASH")
+                # only the columns the expansion needs are broadcast
+                # (url/rank/depth — not host/scheduled_ms; guide §2.3)
+                cand = _expand(frontier.select("url", "rank", "depth"), self.links, last_fresh)
+                cand, robots_blocked = self._filter_robots(cand)
+                if self._bloom_this_wave(seen_count, last_fresh):
+                    # Bloom pre-filter: definitely-new candidates skip the
+                    # exact join; only maybe-seen get the flag lookup
+                    bloom = self._grow_bloom(bloom, seen, frontier, seen_count, last_fresh)
+                    definitely_new, maybe = split_candidates(cand, bloom)
+                    joined = definitely_new.withColumn(
+                        "__seen", F.lit(None).cast("boolean")
+                    ).unionByName(maybe.join(seen_side, "url", "left"))
                 else:
-                    inc = build_bloom(
-                        frontier.select("url"),
-                        capacity=bloom.capacity,
-                        n_shards=self.bloom_shards,
-                        eager=False,
-                        approx_rows=last_fresh,
+                    joined = cand.join(seen_side, "url", "left")
+                # ONE job per wave: candidate/dedup counts ride the frontier
+                # checkpoint as an Observation over the pre-filter join rows —
+                # no separate wide checkpoint and no extra count jobs
+                obs = Observation(f"crawl_w{wave}")
+                fresh = (
+                    joined.observe(
+                        obs,
+                        F.count(F.lit(1)).alias("n_cand"),
+                        F.sum(F.col("__seen").isNotNull().cast("long")).alias("n_dup"),
                     )
-                    old = bloom
-                    bloom = bloom.merge(inc)
-                    old.unpersist()
-                definitely_new, maybe = split_candidates(cand, bloom)
-                joined = definitely_new.withColumn(
-                    "__seen", F.lit(None).cast("boolean")
-                ).unionByName(
-                    maybe.join(
-                        self._seen_join_side(seen), "url", "left"
-                    )
+                    .where(F.col("__seen").isNull())
+                    .drop("__seen")
                 )
-            else:
-                seen_side = seen_table.df() if seen_table is not None else seen
-                joined = cand.join(
-                    self._seen_join_side(seen_side), "url", "left"
-                )
-            # ONE job per wave: candidate/dedup counts ride the frontier
-            # checkpoint as an Observation over the pre-filter join rows —
-            # no separate wide checkpoint and no extra count jobs
-            from pyspark.sql import Observation
-
-            obs = Observation(f"crawl_w{wave}")
-            fresh = (
-                joined.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_cand"),
-                    F.sum(F.col("__seen").isNotNull().cast("long")).alias("n_dup"),
-                )
-                .where(F.col("__seen").isNull())
-                .drop("__seen")
-            )
-            next_frontier = fresh.withColumn("host", host_of(F.col("url")))
-            if self.wait_ms > 0:
-                # politeness: earliest allowed fetch time per host bucket
-                # (window over the host partition about to be created); the
-                # watermark offsets each host past its previous wave's last
-                # fetch so spacing holds across the wave boundary too
-                from .politeness import host_watermark, politeness_schedule
-
-                next_frontier = politeness_schedule(
-                    next_frontier.drop("host"), wait_ms=self.wait_ms,
-                    watermark=watermark,
-                )
-            if self.partition_by_host:
-                # (measured round 3: sizing the partition count to the wave
-                # changed nothing — the ~2 s/wave floor is localCheckpoint
-                # materialization + job scheduling, not task count)
-                next_frontier = next_frontier.repartition(F.col("host"))
-            # slim dedicated checkpoint: what stays alive across waves is
-            # only (url, rank, depth, host) per increment — the seen union
-            # reads these. Stats are RESET here: the bloom probe's 8 joins
-            # would compound sizeInBytes estimates 8x per wave (see util)
-            next_frontier = checkpoint_reset_stats(next_frontier)
-            got = obs.get
-            n_cand = int(got["n_cand"] or 0)
-            n_fresh = n_cand - int(got["n_dup"] or 0)
-            m = {
-                "wave": wave,
-                "candidates": n_cand,
-                "deduped": n_cand - n_fresh,
-                "robots_blocked": robots_blocked,
-                "enqueued": n_fresh,
-                "wall_s": round(_time.time() - _wave_t0, 3),
-            }
-            metrics.append(m)
-            last_fresh = n_fresh
-            if n_fresh == 0:
-                next_frontier.unpersist()
-                break
-            frontier = next_frontier
-            if self.wait_ms > 0:
-                from .politeness import host_watermark
-
-                old_wm = watermark
-                watermark = host_watermark(
-                    frontier.select("host", "scheduled_ms"), watermark
-                ).localCheckpoint(eager=True)
-                if old_wm is not None:
-                    old_wm.unpersist()
-            # append-only seen: new increment unioned/appended, prior
-            # increments are already stored — nothing is rewritten
-            seen = seen.unionByName(frontier.select("url"))
-            if seen_table is not None:
-                seen_table.append(frontier.select("url"))
-            if self.store:
-                self.store.commit(wave, frontier, m)
-            wave += 1
-        return CrawlRun(seen=seen, frontier=frontier, waves=wave, metrics=metrics)
+                next_frontier = self._with_host(fresh, watermark)
+                # slim dedicated checkpoint: what stays alive across waves is
+                # only (url, rank, depth, host) per increment — the seen union
+                # reads these. Stats are RESET here: the bloom probe's 8 joins
+                # would compound sizeInBytes estimates 8x per wave (see util)
+                next_frontier = checkpoint_reset_stats(next_frontier)
+                got = obs.get
+                n_cand = int(got["n_cand"] or 0)
+                n_fresh = n_cand - int(got["n_dup"] or 0)
+                m = {
+                    "wave": wave,
+                    "candidates": n_cand,
+                    "deduped": n_cand - n_fresh,
+                    "robots_blocked": robots_blocked,
+                    "enqueued": n_fresh,
+                    "wall_s": round(time.time() - wave_t0, 3),
+                }
+                metrics.append(m)
+                last_fresh = n_fresh
+                if n_fresh == 0:
+                    next_frontier.unpersist()
+                    break
+                frontier = next_frontier
+                increments.append(frontier)
+                if self.wait_ms > 0:
+                    watermark = self._advance_watermark(frontier, watermark)
+                # append-only seen: new increment unioned/appended, prior
+                # increments are already stored — nothing is rewritten
+                seen = seen.unionByName(frontier.select("url"))
+                if self.store:
+                    self.store.commit(wave, frontier, m)
+                wave += 1
+        visited = increments[0]
+        for inc in increments[1:]:
+            visited = visited.unionByName(inc)
+        return CrawlResult(visited=visited, seen=seen, waves=wave, metrics=metrics, frontier=frontier)

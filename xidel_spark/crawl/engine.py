@@ -40,56 +40,92 @@ scalable path for bounded-depth production crawls is `crawl_waves`.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .order import seg, seg_py
 
 UNLIMITED = 1 << 30
 
+# Physical sizing of the iterative loops, measured at local[32] (r6): rows
+# per shuffle partition; the loop size up to which AQE stays off (its
+# per-query stage re-planning measured ~0.5 s of planning latency per tiny
+# iteration); the largest frontier / best side broadcast into the
+# expansion join; and the crawler's fanout guess before it has observed a
+# wave.
+ROWS_PER_PARTITION = 50_000
+AQE_MIN_ROWS = 5_000_000
+BROADCAST_MAX_ROWS = 2_000_000
+FANOUT_GUESS = 4.0
 
-class _sized_loop:
-    """Scale-adaptive physical sizing for an iterative fixpoint (r6,
-    guide §2): shuffle partitions derived from the loop's bounded work
-    (expected_rows / xidel.crawl.waveRowsPerPartition, capped at the
-    session setting), and AQE — whose per-query stage re-planning measured
-    ~0.5 s of driver latency per tiny iteration — disabled when the whole
-    loop is below xidel.crawl.aqeMinCandidates rows. Restores both confs on
-    exit; results are unaffected (only partition counts / replanning
-    change). `static` tells callers whether the plan is statically sized
-    (they then hint SHUFFLE_HASH where the planner would otherwise pick a
-    sort-merge join on default-stat checkpointed inputs)."""
 
-    def __init__(self, spark: SparkSession, expected_rows: int):
-        self.spark = spark
-        self.expected = max(1, int(expected_rows))
+def _partitions(base: int, rows: int) -> int:
+    """Shuffle partitions for `rows` rows, capped at `base`."""
+    return min(base, max(1, -(-int(rows) // ROWS_PER_PARTITION)))
 
-    def __enter__(self) -> bool:
-        conf = self.spark.conf
-        self._parts0 = conf.get("spark.sql.shuffle.partitions")
-        self._aqe0 = conf.get("spark.sql.adaptive.enabled", "true")
-        rpp = int(conf.get("xidel.crawl.waveRowsPerPartition", "50000"))
-        aqe_min = int(conf.get("xidel.crawl.aqeMinCandidates", "5000000"))
-        parts = min(int(self._parts0), max(1, -(-self.expected // rpp)))
-        static = self.expected <= aqe_min
-        conf.set("spark.sql.shuffle.partitions", str(parts))
+
+@contextmanager
+def _sized_loop(spark: SparkSession):
+    """Scale-adaptive physical sizing for an iterative loop (r6, guide §2).
+
+    Yields `size(expected_rows) -> static`, which sets shuffle partitions
+    from the loop's bounded work (expected_rows / ROWS_PER_PARTITION,
+    capped at the setting on entry) and turns AQE off while expected_rows
+    <= AQE_MIN_ROWS. `static` tells callers the plan is statically sized:
+    they then hint SHUFFLE_HASH where the planner would otherwise pick a
+    sort-merge join on default-stat checkpointed inputs. Results are
+    unaffected; only partition counts and re-planning change.
+
+    Both confs are session-global, so the loop owns the session while it
+    runs: a query planned concurrently on the same session inherits the
+    loop's sizing. Both are restored on exit, exceptions included."""
+    conf = spark.conf
+    parts0 = conf.get("spark.sql.shuffle.partitions")
+    aqe0 = conf.get("spark.sql.adaptive.enabled", "true")
+
+    def size(expected_rows: int) -> bool:
+        static = expected_rows <= AQE_MIN_ROWS
+        conf.set("spark.sql.shuffle.partitions", str(_partitions(int(parts0), expected_rows)))
         conf.set("spark.sql.adaptive.enabled", "false" if static else "true")
         return static
 
-    def __exit__(self, *exc) -> None:
-        self.spark.conf.set("spark.sql.shuffle.partitions", self._parts0)
-        self.spark.conf.set("spark.sql.adaptive.enabled", self._aqe0)
+    try:
+        yield size
+    finally:
+        conf.set("spark.sql.shuffle.partitions", parts0)
+        conf.set("spark.sql.adaptive.enabled", aqe0)
+
+
+@contextmanager
+def _pinned(links: DataFrame, *extra: str):
+    """Yields (links, |links|): the loop's (src, idx, dst, *extra) table,
+    materialized ONCE and hash-partitioned on the join key; released on
+    exit. Without this every step re-runs the whole upstream plan (corpus
+    synthesis / span extraction — scan + groupBy + join + explode per
+    iteration, guide §2.4) and re-shuffles links for the join. The
+    persisted InMemoryRelation keeps hashpartitioning(src), so only the
+    small side exchanges per step. MEMORY_AND_DISK spills at scale."""
+    links = (
+        links.select(F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst"), *extra)
+        .repartition(F.col("src"))
+        .persist()
+    )
+    try:
+        yield links, links.count()
+    finally:
+        links.unpersist()
 
 
 @dataclass
 class CrawlResult:
-    visited: DataFrame   # (url, rank, depth) — one row per visit (repeats possible if dedup off)
+    visited: DataFrame   # (url, rank, depth, ...) — one row per visit (repeats possible if dedup off)
     seen: DataFrame      # (url) — every enqueued url (the duplication list)
     waves: int = 0
     metrics: list[dict] = field(default_factory=list)
+    frontier: DataFrame | None = None  # FrontierCrawler: the last wave's increment
 
 
 def _seeds_df(spark: SparkSession, seeds: list[str] | DataFrame, dedup: bool) -> DataFrame:
@@ -109,6 +145,99 @@ def _seeds_df(spark: SparkSession, seeds: list[str] | DataFrame, dedup: bool) ->
     return df.select("url", seg(F.col("seed_idx").cast("int")).alias("rank"), F.lit(0).alias("depth"))
 
 
+def _expand(frontier: DataFrame, links: DataFrame, rows: int | None, payload: str = "depth") -> DataFrame:
+    """frontier (url, rank, payload) ⋈ links (src, idx, dst): one candidate
+    per dst, from its FIRST enqueuer — the min (parent rank, link idx).
+    The min runs on the parent rank BEFORE the child segment is
+    concatenated: comparing concatenated child ranks would wrongly prefer
+    a longer path through an earlier-rank subtree. The payload (depth, or
+    the pipeline's stage) rides the min and comes out incremented; links
+    that carry a payload column also join on it.
+
+    The frontier is broadcast while `rows` (its size, or an upper bound)
+    is at most BROADCAST_MAX_ROWS, so links need neither exchange nor
+    sort; above that the planner picks the shuffle join (no SHUFFLE_HASH
+    hint: a hash build cannot spill). Lazy: runs no Spark action."""
+    on = frontier.url == links.src
+    if payload in links.columns:
+        on = on & (frontier[payload] == links[payload])
+    side = F.broadcast(frontier) if rows is not None and rows <= BROADCAST_MAX_ROWS else frontier
+    return (
+        side.join(links, on)
+        .groupBy(links.dst)
+        .agg(F.min(F.struct(frontier.rank, links.idx, frontier[payload])).alias("m"))
+        .select(
+            F.col("dst").alias("url"),
+            F.concat(F.col("m.rank"), seg(F.col("m.idx"))).alias("rank"),
+            (F.col(f"m.{payload}") + 1).alias(payload),
+        )
+    )
+
+
+def _relax(
+    best: DataFrame, cand: DataFrame, seeds: DataFrame, name: str, payload: str = "depth"
+) -> tuple[DataFrame, int]:
+    """One relaxation step: per url the min (rank, payload) over the
+    previous best and the new candidates, checkpointed. Returns (new best,
+    urls changed).
+
+    Seeds are excluded from the candidates: all data sources are enqueued
+    into the dup list before any visit (xidelbase.pas:2099-2100), so a
+    seed's rank is fixed and links back to a seed are always dedup-dropped.
+    Convergence detection is FUSED into the aggregate: the best side
+    carries its previous rank, and a url changed iff it is new (no old
+    rank) or relaxed below it. The count rides the checkpoint job as an
+    Observation — no separate anti-join probe per step."""
+    merged = best.withColumn("old_rank", F.col("rank")).unionByName(
+        cand.join(seeds.select("url"), "url", "left_anti")
+        .withColumn("old_rank", F.lit(None).cast("string"))
+    )
+    obs = Observation(name)
+    new_best = (
+        merged.groupBy("url")
+        .agg(
+            F.min(F.struct("rank", payload)).alias("m"),
+            F.min("old_rank").alias("old_rank"),
+        )
+        .withColumn(
+            "__changed",
+            (F.col("old_rank").isNull() | (F.col("m.rank") < F.col("old_rank"))).cast("int"),
+        )
+        .observe(obs, F.sum("__changed").alias("ch"))
+        .select("url", F.col("m.rank").alias("rank"), F.col(f"m.{payload}").alias(payload))
+        .localCheckpoint(eager=True)
+    )
+    return new_best, int(obs.get["ch"] or 0)
+
+
+def _fixpoint(
+    spark: SparkSession, links: DataFrame, n_links: int, seeds: DataFrame,
+    *, max_iter: int, payload: str = "depth",
+) -> tuple[DataFrame, int, int]:
+    """Relax ranks from `seeds` (url, rank, payload) over pinned `links`
+    until no url changes, sized once from |links|. Returns (best, steps,
+    rows) where rows = |seeds| + Σ changed ≥ |best| (every new url counts
+    as changed), tracked exactly from the Observations; it decides the
+    broadcast of best into each expansion."""
+    steps = 0
+    with _sized_loop(spark) as size:
+        size(n_links)
+        # seed prep (a dedup groupBy + checkpoint) runs under the loop
+        # sizing too — at fixture/gate scale it is a 1-partition job
+        seeds = seeds.localCheckpoint(eager=True)
+        best, rows = seeds, seeds.count()
+        while steps < max_iter:
+            cand = _expand(best, links, rows, payload)
+            new_best, changed = _relax(best, cand, seeds, f"relax_{steps}", payload)
+            steps += 1
+            if best is not seeds:
+                best.unpersist()  # superseded relaxation state
+            best, rows = new_best, rows + changed
+            if changed == 0:
+                break
+    return best, steps, rows
+
+
 def _with_order(visited: DataFrame, approx_rows: int | None = None) -> DataFrame:
     """ord = global crawl-order position. Range-partitioned two-pass
     numbering (util.total_order) — the rank string already IS the total
@@ -119,10 +248,8 @@ def _with_order(visited: DataFrame, approx_rows: int | None = None) -> DataFrame
 
     n = None
     if approx_rows is not None:
-        spark = visited.sparkSession
-        rpp = int(spark.conf.get("xidel.crawl.waveRowsPerPartition", "50000"))
-        base = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n = min(base, max(1, -(-int(approx_rows) // rpp)))
+        base = int(visited.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n = _partitions(base, approx_rows)
     return total_order(visited, ["rank"], out_col="ord", num_partitions=n)
 
 
@@ -139,91 +266,12 @@ def crawl_exact(
     per src given by idx. Returns visit order identical to the reference's
     recursive loop (golden tests/output/tef).
     """
-    from pyspark.sql import Observation
-
-    # materialize the link table ONCE, hash-partitioned on the join key:
-    # without this every relaxation step re-runs the whole upstream plan
-    # (corpus synthesis / span extraction — scan + groupBy + join + explode
-    # per iteration, guide §2.4) and re-shuffles links for the sort-merge
-    # join. The persisted InMemoryRelation keeps hashpartitioning(src), so
-    # only the (small) best side exchanges per step. Standard iterative-
-    # algorithm shape; MEMORY_AND_DISK spills at scale.
-    links = (
-        links.select(F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst"))
-        .repartition(F.col("src"))
-        .persist()
-    )
-    n_links = links.count()
-    waves = 0
-    # best is broadcast into the relaxation join while provably small
-    # (|best| ≤ |seeds| + Σ changed, tracked exactly from the Observation)
-    # — the links side then needs neither exchange nor sort; falls back to
-    # the co-partitioned shuffle join when the frontier outgrows the cap,
-    # exactly like FrontierCrawler's frontier broadcast.
-    bcast_max = int(spark.conf.get("xidel.crawl.broadcastBestMax", "2000000"))
-    try:
-        with _sized_loop(spark, n_links) as static:
-            # seed prep (a dedup groupBy + checkpoint) runs under the loop
-            # sizing too — at fixture/gate scale it is a 1-partition job
-            seed_urls = _seeds_df(spark, seeds, dedup=True).localCheckpoint(eager=True)
-            best = seed_urls
-            best_rows_ub = seed_urls.count()
-            for it in range(max_iter):
-                waves += 1
-                # one relaxation step: per dst, the best (parent rank, link
-                # idx). Seeds are excluded: all data sources are enqueued
-                # into the dup list before any visit (xidelbase.pas:
-                # 2099-2100), so a seed's rank is fixed and links back to a
-                # seed are always dedup-dropped.
-                lnk = links.hint("SHUFFLE_HASH") if static else links
-                bside = F.broadcast(best) if best_rows_ub <= bcast_max else best
-                cand = (
-                    bside.join(lnk, best.url == links.src)
-                    .groupBy(links.dst)
-                    .agg(F.min(F.struct("rank", "idx", "depth")).alias("m"))
-                    .select(
-                        F.col("dst").alias("url"),
-                        F.concat(F.col("m.rank"), seg(F.col("m.idx"))).alias("rank"),
-                        (F.col("m.depth") + 1).alias("depth"),
-                    )
-                    .join(seed_urls.select("url"), "url", "left_anti")
-                )
-                # convergence detection FUSED into the relaxation aggregate:
-                # carry the previous rank on the best side; a url changed iff
-                # it is new (no old rank) or relaxed below it. The count
-                # rides the checkpoint job as an Observation — no separate
-                # anti-join probe per iteration.
-                merged = best.withColumn("old_rank", F.col("rank")).unionByName(
-                    cand.withColumn("old_rank", F.lit(None).cast("string"))
-                )
-                obs = Observation(f"relax_{it}")
-                new_best = (
-                    merged.groupBy("url")
-                    .agg(
-                        F.min(F.struct("rank", "depth")).alias("m"),
-                        F.min("old_rank").alias("old_rank"),
-                    )
-                    .withColumn(
-                        "__changed",
-                        (F.col("old_rank").isNull() | (F.col("m.rank") < F.col("old_rank"))).cast("int"),
-                    )
-                    .observe(obs, F.sum("__changed").alias("ch"))
-                    .select("url", F.col("m.rank").alias("rank"), F.col("m.depth").alias("depth"))
-                    .localCheckpoint(eager=True)
-                )
-                changed = int(obs.get["ch"] or 0)
-                if best is not seed_urls:
-                    best.unpersist()  # superseded relaxation state
-                best = new_best
-                best_rows_ub += changed  # every new url counts as changed
-                if changed == 0:
-                    break
-    finally:
-        # best/visited derive from checkpointed RDDs only — links is free
-        links.unpersist()
-    visited = _with_order(best, approx_rows=best_rows_ub)
-    seen = best.select("url")
-    return CrawlResult(visited=visited, seen=seen, waves=waves)
+    with _pinned(links) as (links, n_links):
+        best, steps, rows = _fixpoint(
+            spark, links, n_links, _seeds_df(spark, seeds, dedup=True), max_iter=max_iter
+        )
+    # best derives from checkpointed RDDs only — links is already free
+    return CrawlResult(visited=_with_order(best, approx_rows=rows), seen=best.select("url"), waves=steps)
 
 
 def expand_nodedup(
@@ -238,43 +286,32 @@ def expand_nodedup(
     Pure tree expansion: every link spawns a visit instance (goldens
     tests/output/maxlevel0..3, repetitionon). One wave per depth level.
     """
-    # same iterative-loop materialization + sizing as crawl_exact: links is
-    # scanned once per depth level, never re-derived or re-shuffled
-    links = (
-        links.select(F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst"))
-        .repartition(F.col("src"))
-        .persist()
-    )
-    n_links = links.count()
     enqueued_only = None
-    try:
-        with _sized_loop(spark, n_links) as static:
-            level = _seeds_df(spark, seeds, dedup=False).localCheckpoint(eager=True)
-            layers = [level]
-            for d in range(max_depth + 1):
-                lnk = links.hint("SHUFFLE_HASH") if static else links
-                children = (
-                    level.join(lnk, level.url == links.src)
-                    .select(
-                        F.col("dst").alias("url"),
-                        F.concat("rank", seg(F.col("idx"))).alias("rank"),
-                        F.lit(d + 1).alias("depth"),
-                    )
+    with _pinned(links) as (links, n_links), _sized_loop(spark) as size:
+        lnk = links.hint("SHUFFLE_HASH") if size(n_links) else links
+        level = _seeds_df(spark, seeds, dedup=False).localCheckpoint(eager=True)
+        layers = [level]
+        for d in range(max_depth + 1):
+            children = (
+                level.join(lnk, level.url == links.src)
+                .select(
+                    F.col("dst").alias("url"),
+                    F.concat("rank", seg(F.col("idx"))).alias("rank"),
+                    F.lit(d + 1).alias("depth"),
                 )
-                if d < max_depth:
-                    level = children.localCheckpoint(eager=True)
-                    if level.limit(1).count() == 0:
-                        break
-                    layers.append(level)
-                else:
-                    # children of depth-max_depth visits are enqueued
-                    # (registered) but never fetched (xidelbase.pas:2012
-                    # depth check at fetch time) — materialized so the
-                    # returned seen set does not re-reference links after
-                    # unpersist
-                    enqueued_only = children.select("url").localCheckpoint(eager=True)
-    finally:
-        links.unpersist()
+            )
+            if d < max_depth:
+                level = children.localCheckpoint(eager=True)
+                if level.limit(1).count() == 0:
+                    break
+                layers.append(level)
+            else:
+                # children of depth-max_depth visits are enqueued
+                # (registered) but never fetched (xidelbase.pas:2012
+                # depth check at fetch time) — materialized so the
+                # returned seen set does not re-reference links after
+                # unpersist
+                enqueued_only = children.select("url").localCheckpoint(eager=True)
     visited = layers[0]
     for extra in layers[1:]:
         visited = visited.unionByName(extra)
@@ -342,90 +379,14 @@ def crawl_waves(
     seeds: list[str] | DataFrame,
     *,
     max_depth: int = UNLIMITED,
-    max_waves: int = 10_000,
-    shuffle_partitions: int | None = None,
 ) -> CrawlResult:
-    """Scalable wave-synchronous (BFS) frontier loop — the production path.
+    """Scalable wave-synchronous (BFS) frontier loop: FrontierCrawler with
+    robots, politeness and the state store off. Ranks still give a total,
+    deterministic crawl order (BFS-flavored); the seen SET equals the
+    exact engine's whenever depth is unlimited, since both are
+    reachability."""
+    from .crawler import FrontierCrawler
 
-    Per wave: frontier ⋈ links → candidates → within-wave first-enqueuer
-    resolution (min rank) → LEFT ANTI join vs the seen set (the central
-    dedup join, SURVEY.md §2.4) → new frontier. Ranks still give a total,
-    deterministic crawl order (BFS-flavored); the seen SET equals the exact
-    engine's whenever depth is unlimited, since both are reachability.
-
-    Per-wave metrics (candidates / deduped / enqueued) are recorded —
-    the lineage the north rule asks to checkpoint.
-    """
-    from pyspark.sql import Observation
-
-    # iterative-loop materialization + sizing (see crawl_exact): links is
-    # pinned once, co-partitioned on src; the sort-merge join on static
-    # waves is hinted to a shuffled-hash build
-    links = (
-        links.select(F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst"))
-        .repartition(F.col("src"))
-        .persist()
-    )
-    n_links = links.count()
-    metrics: list[dict] = []
-    wave = 0
-    try:
-        with _sized_loop(spark, n_links) as static:
-            frontier = _seeds_df(spark, seeds, dedup=True).localCheckpoint(eager=True)
-            # seen is an append-only UNION of per-wave frontier increments:
-            # each increment is checkpointed exactly once, never rewritten
-            # (the Iceberg append pattern — at 10^10 scale the seen table
-            # must not be copied per wave).
-            seen = frontier.select("url")
-            visited_layers = [frontier]
-            while wave < max_waves:
-                depth = wave
-                if depth + 1 > max_depth:
-                    break
-                lnk = links.hint("SHUFFLE_HASH") if static else links
-                cand = (
-                    frontier.join(lnk, frontier.url == links.src)
-                    .groupBy(links.dst)
-                    .agg(F.min(F.struct("rank", "idx", "depth")).alias("m"))
-                    .select(
-                        F.col("dst").alias("url"),
-                        F.concat(F.col("m.rank"), seg(F.col("m.idx"))).alias("rank"),
-                        (F.col("m.depth") + 1).alias("depth"),
-                    )
-                )
-                # ONE job per wave: the candidate/dedup counts ride the fresh
-                # checkpoint as an Observation over the pre-filter rows — no
-                # separate cand checkpoint and no extra count jobs
-                obs = Observation(f"wave_{wave}")
-                seen_side = seen.withColumn("__seen", F.lit(True))
-                if static:
-                    seen_side = seen_side.hint("SHUFFLE_HASH")
-                fresh = (
-                    cand.join(seen_side, "url", "left")
-                    .observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n_cand"),
-                        F.sum(F.col("__seen").isNotNull().cast("long")).alias("n_dup"),
-                    )
-                    .where(F.col("__seen").isNull())
-                    .drop("__seen")
-                    .localCheckpoint(eager=True)
-                )
-                got = obs.get
-                n_cand = int(got["n_cand"] or 0)
-                n_fresh = n_cand - int(got["n_dup"] or 0)
-                metrics.append(
-                    {"wave": wave, "candidates": n_cand, "deduped": n_cand - n_fresh, "enqueued": n_fresh}
-                )
-                if n_fresh == 0:
-                    break
-                frontier = fresh
-                seen = seen.unionByName(frontier.select("url"))
-                visited_layers.append(frontier)
-                wave += 1
-    finally:
-        links.unpersist()
-    visited = visited_layers[0]
-    for extra in visited_layers[1:]:
-        visited = visited.unionByName(extra)
-    return CrawlResult(visited=_with_order(visited), seen=seen, waves=wave + 1, metrics=metrics)
+    res = FrontierCrawler(spark, links, max_depth=max_depth).run(seeds)
+    res.visited = _with_order(res.visited.select("url", "rank", "depth"))
+    return res

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..extract.links import extract_kind_text, extract_links
-from .engine import crawl_exact
+from .engine import _fixpoint, _pinned, _seeds_df, crawl_exact
 
 
 @dataclass
@@ -106,72 +106,31 @@ def run_pipeline_dfs(
     (parent rank, link idx) — the smallest parent rank IS the earliest
     processed parent; the winning enqueue fixes the doc's stage and hence
     its action suffix. The stage graph has no beyond-the-end follows, so
-    unlike finite --follow-level the fixpoint is exact (no over-depth
-    poisoning; cf. engine.crawl_exact_depth_limited).
+    there is no over-depth poisoning (cf. engine.crawl_exact_depth_limited).
+    Known gap: relaxation never retracts a candidate, so when a doc's
+    min-rank enqueue later moves it to a stage that does not follow, the
+    children it enqueued at its earlier stage stay in the output.
 
     Returns (url, stage, rank, selector, value, ord) ordered by ord =
     (rank, selector position, hit index) — the print order."""
-    from pyspark.sql import Observation
+    from functools import reduce
 
     from ..util import total_order
-    from .order import seg
 
-    links_by_stage = {
-        s: extract_links(docs, st.follow).localCheckpoint(eager=True)
+    best = _seeds_df(spark, seeds, dedup=True).withColumnRenamed("depth", "stage")
+    # one link table for all stages, tagged with the stage whose selector
+    # produced it: _expand joins it on (url, stage), so the first-enqueuer
+    # min runs across ALL stages at once
+    tagged = [
+        extract_links(docs, st.follow).withColumn("stage", F.lit(s))
         for s, st in enumerate(stages)
         if st.follow is not None and s + 1 < len(stages)
-    }
-    best = spark.createDataFrame(
-        [(u, seg_val, 0) for u, seg_val in
-         ((u, "%08x" % i) for i, u in enumerate(seeds))],
-        "url string, rank string, stage int",
-    ).localCheckpoint(eager=True)
-    for it in range(max_iter):
-        edges = None
-        for s, links in links_by_stage.items():
-            e = (
-                best.where(F.col("stage") == s)
-                .join(links, F.col("url") == links.src)
-                .select(
-                    F.col("dst"), F.col("rank").alias("prank"), F.col("idx"),
-                    F.lit(s + 1).alias("nstage"),
-                )
+    ]
+    if tagged:
+        with _pinned(reduce(lambda a, b: a.unionByName(b), tagged), "stage") as (links, n_links):
+            best, _, _ = _fixpoint(
+                spark, links, n_links, best, max_iter=max_iter, payload="stage"
             )
-            edges = e if edges is None else edges.unionByName(e)
-        if edges is None:
-            break
-        # first-enqueuer = the MIN-RANK PARENT (earliest processed) across
-        # ALL stages, then its link index — reduce on the parent rank
-        # BEFORE concatenating the child segment (comparing concatenated
-        # child ranks would wrongly prefer a longer path through an
-        # earlier-rank subtree; same trick as engine.crawl_exact)
-        cands = (
-            edges.groupBy("dst")
-            .agg(F.min(F.struct(F.col("prank"), F.col("idx"), F.col("nstage"))).alias("m"))
-            .select(
-                F.col("dst").alias("url"),
-                F.concat(F.col("m.prank"), seg(F.col("m.idx"))).alias("rank"),
-                F.col("m.nstage").alias("stage"),
-            )
-        )
-        merged = best.withColumn("old_rank", F.col("rank")).unionByName(
-            cands.join(best.where(F.col("stage") == 0).select("url"), "url", "left_anti")
-            .withColumn("old_rank", F.lit(None).cast("string"))
-        )
-        obs = Observation(f"pipe_{it}")
-        new_best = (
-            merged.groupBy("url")
-            .agg(F.min(F.struct("rank", "stage")).alias("m"), F.min("old_rank").alias("o"))
-            .withColumn("__ch", (F.col("o").isNull() | (F.col("m.rank") < F.col("o"))).cast("int"))
-            .observe(obs, F.sum("__ch").alias("ch"))
-            .select("url", F.col("m.rank").alias("rank"), F.col("m.stage").alias("stage"))
-            .localCheckpoint(eager=True)
-        )
-        changed = int(obs.get["ch"] or 0)
-        best.unpersist()
-        best = new_best
-        if changed == 0:
-            break
     outputs = []
     for s, stage in enumerate(stages):
         for sel_i, sel in enumerate(stage.extract):
