@@ -23,6 +23,29 @@ def cyclic_links(spark):
 
 
 SEEDS = ["http://h0.test/p/0", "http://h1.test/p/1"]
+# every host allows all; h1.test disallows /p/, i.e. all of its pages
+H1_DISALLOWED = [(f"h{i}.test", "/", True) for i in range(5)] + [("h1.test", "/p/", False)]
+
+
+def _rules(spark, rules=H1_DISALLOWED):
+    return spark.createDataFrame(rules, "host string, prefix string, allow boolean")
+
+
+@pytest.fixture(scope="module")
+def exact_run(spark, cyclic_links):
+    """exact_run(rules): the exact-path (no Bloom, no store) crawl of
+    cyclic_links from SEEDS, run once per rule set and shared by the tests
+    that compare against it."""
+    runs = {}
+
+    def run(rules=None):
+        key = None if rules is None else tuple(rules)
+        if key not in runs:
+            robots = None if rules is None else _rules(spark, rules)
+            runs[key] = FrontierCrawler(spark, cyclic_links, robots_rules=robots).run(SEEDS)
+        return runs[key]
+
+    return run
 
 
 def test_bloom_no_false_negatives(spark):
@@ -81,51 +104,134 @@ def test_bloom_never_driver_resident(spark):
     assert not hasattr(bloom, "blocks")
 
 
-def test_crawler_matches_engine_seen(spark, cyclic_links):
+def test_crawler_matches_engine_seen(cyclic_links, exact_run):
     """the crawler's seen set is the sequential reference's dup list
     (reachability, since depth is unlimited)."""
     link_map: dict[str, list[str]] = {}
     for r in cyclic_links.orderBy("src", "idx").collect():
         link_map.setdefault(r["src"], []).append(r["dst"])
-    run = FrontierCrawler(spark, cyclic_links).run(SEEDS)
+    run = exact_run()
     assert {r["url"] for r in run.seen.collect()} == simulate_crawl(link_map, SEEDS).seen
 
 
-def test_crawler_bloom_path_equal(spark, cyclic_links):
-    plain = FrontierCrawler(spark, cyclic_links).run(SEEDS)
-    bloomed = FrontierCrawler(spark, cyclic_links, use_bloom=True, bloom_shards=4).run(SEEDS)
+@pytest.mark.parametrize("rules", [None, H1_DISALLOWED], ids=["no_rules", "h1_disallowed"])
+def test_crawler_bloom_path_equal(spark, cyclic_links, exact_run, rules):
+    """the Bloom path gives the exact path's per-wave counts, with and
+    without robots rules. The counts are an Observation above the Bloom
+    split, which references the candidate plan twice; robots_blocked is
+    checked against a sequential BFS recount (distinct blocked candidate
+    urls per wave, the seeds at wave 0)."""
+    robots = None if rules is None else _rules(spark, rules)
+    plain = exact_run(rules)
+    bloomed = FrontierCrawler(
+        spark, cyclic_links, robots_rules=robots, use_bloom=True, bloom_shards=4
+    ).run(SEEDS)
     assert {r["url"] for r in plain.seen.collect()} == {r["url"] for r in bloomed.seen.collect()}
-    assert [m["enqueued"] for m in plain.metrics] == [m["enqueued"] for m in bloomed.metrics]
+    keys = ("candidates", "deduped", "robots_blocked", "enqueued")
+    assert [[m[k] for k in keys] for m in plain.metrics] == [
+        [m[k] for k in keys] for m in bloomed.metrics
+    ]
+
+    adj: dict[str, list[str]] = {}
+    for r in cyclic_links.collect():
+        adj.setdefault(r["src"], []).append(r["dst"])
+    blocked = {u for u in adj if rules is not None and u.startswith("http://h1.test/p/")}
+    cand, seen, expect = set(SEEDS), set(), []
+    while True:
+        fresh = cand - blocked - seen
+        expect.append([len(cand & blocked), len(fresh)])
+        if not fresh:
+            break
+        seen |= fresh
+        cand = {d for u in fresh for d in adj[u]}
+    assert [[m["robots_blocked"], m["enqueued"]] for m in plain.metrics] == expect
+    assert any(e[0] for e in expect) == (rules is not None)
 
 
 def test_checkpoint_resume_exact(spark, cyclic_links, tmp_path):
-    full = FrontierCrawler(spark, cyclic_links).run(SEEDS)
+    """a robots + politeness crawl killed after 3 waves and resumed from
+    the store ends exactly where an uninterrupted crawl does: the same
+    per-wave metrics (minus wall_s) and the same visits and schedule, so
+    the politeness spacing holds across the resume too."""
+    kw = {"robots_rules": _rules(spark), "wait_ms": 250}
+    full = FrontierCrawler(spark, cyclic_links, **kw).run(SEEDS)
 
     store = CrawlStateStore(str(tmp_path / "ckpt"))
     # run only 3 waves, "crash"
-    partial = FrontierCrawler(spark, cyclic_links, store=store).run(SEEDS, max_waves=3)
+    partial = FrontierCrawler(spark, cyclic_links, store=store, **kw).run(SEEDS, max_waves=3)
     assert partial.waves == 3
     assert store.latest() is not None
 
     # resume in a "new" crawler over the same store
-    resumed = FrontierCrawler(spark, cyclic_links, store=store).run(SEEDS)
+    resumed = FrontierCrawler(spark, cyclic_links, store=store, **kw).run(SEEDS)
     assert {r["url"] for r in resumed.seen.collect()} == {
         r["url"] for r in full.seen.collect()
     }
-    # lineage: manifests cover every wave with metrics
+
+    def metrics(run):
+        return [{k: v for k, v in m.items() if k != "wall_s"} for m in run.metrics]
+
+    assert metrics(resumed) == metrics(full)
+    cols = ("url", "rank", "depth", "host", "scheduled_ms")
+    visits = sorted(resumed.visited.select(*cols).collect())
+    assert visits == sorted(full.visited.select(*cols).collect())
+    # lineage: manifests cover every wave with metrics, and the row counts
+    # the commits took from the metrics are the increments' real sizes (a
+    # wave's increment is its depth's visits)
     manifests = store.manifests()
     assert [m["wave"] for m in manifests] == list(range(len(manifests)))
     assert all("lineage" in m and m["lineage"]["frontier_files"] for m in manifests)
+    assert [m["frontier_rows"] for m in manifests] == [
+        sum(v["depth"] == m["wave"] for v in visits) for m in manifests
+    ]
 
 
-def test_robots_blocks_host(spark, cyclic_links):
-    hosts = [f"h{i}.test" for i in range(5)]
-    rules = spark.createDataFrame(
-        [(h, "/", True) for h in hosts] + [("h1.test", "/p/", False)],
-        "host string, prefix string, allow boolean",
-    )
-    unfiltered = FrontierCrawler(spark, cyclic_links).run(SEEDS)
-    filtered = FrontierCrawler(spark, cyclic_links, robots_rules=rules).run(SEEDS)
+def test_wave_actions_pinned(spark, cyclic_links, tmp_path, monkeypatch):
+    """a robots + politeness + store crawl runs three Spark actions per
+    enqueuing wave, wave 0 included: the frontier checkpoint, the
+    watermark checkpoint and the parquet commit; the last (empty) wave
+    only its frontier checkpoint. Nothing in the crawler or the store
+    counts, and a resume reads each committed increment once. Spies the
+    way test_plans.test_wave_loop_join_strategies does."""
+    import sys
+
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+
+    events, counts = [], []
+
+    def spy(cls, name, tag):
+        real = getattr(cls, name)
+
+        def wrapper(self, *args, **kwargs):
+            events.append(tag)
+            if tag == "count":
+                counts.append(sys._getframe(1).f_code.co_filename)
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, wrapper)
+
+    spy(DataFrame, "localCheckpoint", "ckpt")
+    spy(DataFrame, "count", "count")
+    spy(DataFrameWriter, "parquet", "write")
+    spy(DataFrameReader, "parquet", "read")
+    store = CrawlStateStore(str(tmp_path / "acts"))
+    kw = {"store": store, "robots_rules": _rules(spark), "wait_ms": 250}
+    wave = ["ckpt", "ckpt", "write"]
+
+    FrontierCrawler(spark, cyclic_links, **kw).run(SEEDS, max_waves=2)
+    assert events == wave * 2  # waves 0 and 1
+    events.clear()
+    run = FrontierCrawler(spark, cyclic_links, **kw).run(SEEDS)
+    enqueuing = sum(m["enqueued"] > 0 for m in run.metrics[2:])
+    # resume: one read per committed increment, the watermark rebuild
+    assert events == ["read"] * 2 + ["ckpt"] + wave * enqueuing + ["ckpt"]
+    assert not [f for f in counts if f.endswith(("crawler.py", "checkpoint.py"))]
+
+
+def test_robots_blocks_host(exact_run):
+    unfiltered = exact_run()
+    filtered = exact_run(H1_DISALLOWED)
     seen_unf = {r["url"] for r in unfiltered.seen.collect()}
     seen_flt = {r["url"] for r in filtered.seen.collect()}
     assert any("h1.test" in u for u in seen_unf)          # would have crawled h1
@@ -173,7 +279,7 @@ def test_robots_disallow_all_is_deterministic(spark):
     assert out.where("allowed").count() == 0
 
 
-def test_torn_wave_is_invisible(spark, cyclic_links, tmp_path):
+def test_torn_wave_is_invisible(spark, cyclic_links, exact_run, tmp_path):
     """snapshot isolation: a crash AFTER data files land but BEFORE the
     manifest commit must leave the store at the previous wave."""
     store = CrawlStateStore(str(tmp_path / "torn"))
@@ -188,7 +294,7 @@ def test_torn_wave_is_invisible(spark, cyclic_links, tmp_path):
     assert snap.wave == last
     # resume proceeds correctly from the last committed wave
     resumed = FrontierCrawler(spark, cyclic_links, store=store).run(SEEDS)
-    full = FrontierCrawler(spark, cyclic_links).run(SEEDS)
+    full = exact_run()
     assert {r["url"] for r in resumed.seen.collect()} == {r["url"] for r in full.seen.collect()}
 
 

@@ -163,27 +163,28 @@ def test_header_order_insensitive_hash(spark):
 
 
 def test_engine_knob(spark):
-    """xidel.urlnorm.engine selects the production engine: 'expr' must plan
-    no Python (BatchEvalPython/ArrowEvalPython), 'arrow' must use Arrow,
-    and both return identical bytes."""
+    """the engine is chosen from the master, with no conf: on the local
+    session `canonicalize` plans the Arrow row-map, the Catalyst forms
+    (`canonicalize_expr`, `resolve_url_expr`) plan no Python at all, and
+    both engines return identical bytes."""
     from xidel_spark.corpus import dirty_urls
-    from xidel_spark.urlnorm import canonicalize
+    from xidel_spark.urlnorm import (
+        canonicalize, canonicalize_expr, resolve_url, resolve_url_expr,
+    )
 
     df = dirty_urls(spark, "/root/testdata/sf0.001")
-    results = {}
-    for eng in ("arrow", "expr"):
-        spark.conf.set("xidel.urlnorm.engine", eng)
-        try:
-            out = df.select("doc_id", canonicalize(F.col("raw_url")).alias("c"))
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            if eng == "expr":
-                assert "EvalPython" not in plan, "expr engine planned Python"
-            else:
-                assert "ArrowEvalPython" in plan
-            results[eng] = sorted(map(tuple, out.collect()))
-        finally:
-            spark.conf.unset("xidel.urlnorm.engine")
-    assert results["arrow"] == results["expr"]
+    base = F.lit("http://h.example.com/a/b/c")
+    prod = df.select(
+        "doc_id", canonicalize(F.col("raw_url")).alias("c"),
+        resolve_url(F.col("raw_url"), base).alias("r"),
+    )
+    expr = df.select(
+        "doc_id", canonicalize_expr(F.col("raw_url")).alias("c"),
+        resolve_url_expr(F.col("raw_url"), base).alias("r"),
+    )
+    assert "ArrowEvalPython" in prod._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in expr._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(tuple, prod.collect())) == sorted(map(tuple, expr.collect()))
 
 
 def test_canonicalize_resolve_fuzz_parity(spark):

@@ -15,10 +15,13 @@ real catalog on a cluster (`CrawlStateStore` is the only seam):
 
 Commits are APPEND-ONLY: each wave writes only its frontier increment; the
 seen set is the union of all committed increments (what Iceberg appends +
-snapshot manifests give for free). A manifest records row counts,
-per-partition file lineage and the wave's dedup metrics. An interrupted
-wave (data written, manifest missing) is invisible on load — snapshot
-isolation.
+snapshot manifests give for free). A manifest records the wave's row count
+(the crawler's `enqueued`, known without a count job), per-partition file
+lineage and the wave's dedup metrics. An interrupted wave (data written,
+manifest missing) is invisible on load — snapshot isolation. A commit
+runs one Spark action (the parquet write); `load` reads each manifest and
+each increment once, and the crawler derives its frontier, seen set,
+visited set and politeness watermark from that one list of increments.
 """
 
 from __future__ import annotations
@@ -34,10 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 @dataclass
 class Snapshot:
-    wave: int
-    frontier: DataFrame  # latest wave's increment
-    seen: DataFrame      # union of all committed increments
-    manifest: dict
+    wave: int                    # latest committed wave
+    increments: list[DataFrame]  # every committed wave's frontier, in wave order
+    metrics: list[dict]          # every committed wave's metrics, in wave order
 
 
 class CrawlStateStore:
@@ -58,7 +60,7 @@ class CrawlStateStore:
             "wave": wave,
             "metrics": metrics,
             "lineage": lineage,
-            "frontier_rows": frontier.count(),
+            "frontier_rows": metrics["enqueued"],
         }
         # atomic commit: write-then-rename; readers never see a partial wave
         fd, tmp = tempfile.mkstemp(dir=self.root / "manifests", suffix=".tmp")
@@ -74,25 +76,20 @@ class CrawlStateStore:
         ]
         return max(waves) if waves else None
 
-    def load(self, spark: SparkSession, wave: int | None = None) -> Snapshot | None:
-        wave = self.latest() if wave is None else wave
-        if wave is None:
+    def load(self, spark: SparkSession) -> Snapshot | None:
+        manifests = self.manifests()
+        if not manifests:
             return None
-        with open(self.root / "manifests" / f"wave-{wave}.json") as f:
-            manifest = json.load(f)
-        frontier = spark.read.parquet(str(self._wave_dir(wave) / "frontier"))
-        increments = [
-            spark.read.parquet(str(self._wave_dir(w) / "frontier")).select("url")
-            for w in range(wave + 1)
-        ]
-        seen = increments[0]
-        for inc in increments[1:]:
-            seen = seen.unionByName(inc)
-        return Snapshot(wave=wave, frontier=frontier, seen=seen, manifest=manifest)
+        wave = manifests[-1]["wave"]
+        return Snapshot(
+            wave=wave,
+            increments=self.increments(spark, wave),
+            metrics=[m["metrics"] for m in manifests],
+        )
 
     def increments(self, spark: SparkSession, wave: int | None = None) -> list[DataFrame]:
-        """Full-column frontier increments for every committed wave — used on
-        resume to rebuild derived per-host state (politeness watermarks)."""
+        """Full-column frontier increments of waves 0..`wave` (default: the
+        latest committed), in wave order — one parquet read each."""
         wave = self.latest() if wave is None else wave
         if wave is None:
             return []

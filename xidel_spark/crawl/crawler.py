@@ -3,10 +3,17 @@
 One object wires together what the reference does in its recursive loop
 (xidelbase.pas:1996-2137) plus the north rule's scale transplants:
 
-frontier wave → robots filter (broadcast rule join) → link expansion
-(frontier ⋈ links) → within-wave first-enqueuer resolution → Bloom
+frontier wave → link expansion (frontier ⋈ links) → within-wave
+first-enqueuer resolution → robots flag (broadcast rule join) → Bloom
 pre-filter → exact anti-join vs seen → politeness-scheduled new frontier →
 checkpoint (frontier + seen + bloom + lineage metrics) → next wave.
+
+All of that is ONE candidate plan per wave: the candidate, robots-blocked
+and duplicate counts are an Observation on the frontier checkpoint, so
+with robots, politeness and the store on a wave runs three Spark actions
+(frontier checkpoint, watermark checkpoint, parquet commit) plus the
+Bloom filter's own build/merge when it is active. Wave 0 flags and
+schedules the seeds the same way.
 
 The expansion and the loop sizing are engine.py's (`_expand`,
 `_sized_loop`), shared with the exact engines.
@@ -19,12 +26,15 @@ shuffle-free or skew-split it.
 
 Resume: constructing a crawler over a store with committed waves continues
 from the latest snapshot; a crawl killed mid-wave re-runs only that wave
-(snapshot isolation via atomic manifests).
+(snapshot isolation via atomic manifests). The frontier, seen set, visited
+set and politeness watermark all derive from the snapshot's one list of
+increments.
 """
 
 from __future__ import annotations
 
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +46,27 @@ from .checkpoint import CrawlStateStore
 from .engine import FANOUT_GUESS, UNLIMITED, CrawlResult, _expand, _seeds_df, _sized_loop
 from .politeness import host_watermark, politeness_schedule
 from .robots import apply_robots
+
+
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b), dfs)
+
+
+def _fresh(flagged: DataFrame, obs: Observation) -> DataFrame:
+    """The allowed, unseen rows of (..., allowed, __seen). `obs` counts the
+    allowed (n), robots-blocked and already-seen allowed (dup) rows on the
+    job that materializes the result — no count job of its own."""
+    allowed, dup = F.col("allowed"), F.col("__seen").isNotNull()
+    return (
+        flagged.observe(
+            obs,
+            F.count_if(allowed).alias("n"),
+            F.count_if(~allowed).alias("blocked"),
+            F.count_if(allowed & dup).alias("dup"),
+        )
+        .where(allowed & ~dup)
+        .drop("allowed", "__seen")
+    )
 
 
 def _expected_rows(metrics: list[dict]) -> int:
@@ -154,53 +185,40 @@ class FrontierCrawler:
             watermark.unpersist()
         return new_watermark
 
-    def _filter_robots(self, cand: DataFrame) -> tuple[DataFrame, int]:
+    def _flag_robots(self, cand: DataFrame) -> DataFrame:
         if self.robots_rules is None:
-            return cand, 0
-        cand = cand.localCheckpoint(eager=True)
-        flags = apply_robots(cand.select("url"), self.robots_rules)
-        kept = cand.join(
-            flags.where("allowed").select("url"), "url", "inner"
-        ).localCheckpoint(eager=True)
-        blocked = cand.count() - kept.count()
-        return kept, blocked
+            return cand.withColumn("allowed", F.lit(True))
+        return apply_robots(cand, self.robots_rules)
 
     def run(self, seeds: list[str] | DataFrame, *, max_waves: int = 10_000) -> CrawlResult:
         spark = self.spark
         watermark = None  # per-host last scheduled_ms carried ACROSS waves
         snap = self.store.load(spark) if self.store else None
         if snap is not None:
-            frontier = snap.frontier.localCheckpoint(eager=True)
-            seen = snap.seen  # union of committed increments (never rewritten)
-            wave = snap.wave + 1
-            metrics = [m["metrics"] for m in self.store.manifests()]
-            increments = self.store.increments(spark, snap.wave)
-            if self.wait_ms > 0:
+            increments, metrics, wave = snap.increments, snap.metrics, snap.wave + 1
+            sched = [i.select("host", "scheduled_ms") for i in increments if "scheduled_ms" in i.columns]
+            if self.wait_ms > 0 and sched:
                 # rebuild the politeness watermark from committed waves so
                 # the >= wait spacing survives a kill/resume boundary
-                for inc in increments:
-                    if "scheduled_ms" in inc.columns:
-                        watermark = host_watermark(
-                            inc.select("host", "scheduled_ms"), watermark
-                        )
-                if watermark is not None:
-                    watermark = watermark.localCheckpoint(eager=True)
+                watermark = host_watermark(_union(sched)).localCheckpoint(eager=True)
         else:
-            frontier = _seeds_df(spark, seeds, dedup=True)
-            frontier, blocked = self._filter_robots(frontier)
-            # seeds are fetches too: schedule wave 0 so the cross-wave
-            # watermark starts at the seeds' last per-host fetch
-            frontier = checkpoint_reset_stats(self._with_host(frontier, None))
-            seen = frontier.select("url")
-            increments = [frontier]
-            m = {"wave": 0, "candidates": 0, "deduped": 0, "robots_blocked": blocked,
-                 "enqueued": frontier.count()}
-            metrics = [m]
+            # seeds are fetches too: robots-flagged like candidates, and
+            # scheduled so the cross-wave watermark starts at the seeds'
+            # last per-host fetch
+            obs = Observation("crawl_seeds")
+            flagged = self._flag_robots(_seeds_df(spark, seeds, dedup=True))
+            fresh = _fresh(flagged.withColumn("__seen", F.lit(None).cast("boolean")), obs)
+            frontier = checkpoint_reset_stats(self._with_host(fresh, None))
+            m = {"wave": 0, "candidates": 0, "deduped": 0,
+                 "robots_blocked": obs.get["blocked"], "enqueued": obs.get["n"]}
+            increments, metrics, wave = [frontier], [m], 1
             if self.wait_ms > 0:
                 watermark = self._advance_watermark(frontier, watermark)
             if self.store:
                 self.store.commit(0, frontier, m)
-            wave = 1
+        frontier = increments[-1]
+        # append-only seen: the union of the increments, never rewritten
+        seen = _union([i.select("url") for i in increments])
 
         bloom = None
         last_fresh = metrics[-1]["enqueued"]
@@ -219,8 +237,9 @@ class FrontierCrawler:
                     seen_side = seen_side.hint("SHUFFLE_HASH")
                 # only the columns the expansion needs are broadcast
                 # (url/rank/depth — not host/scheduled_ms; guide §2.3)
-                cand = _expand(frontier.select("url", "rank", "depth"), self.links, last_fresh)
-                cand, robots_blocked = self._filter_robots(cand)
+                cand = self._flag_robots(
+                    _expand(frontier.select("url", "rank", "depth"), self.links, last_fresh)
+                )
                 if self._bloom_this_wave(seen_count, last_fresh):
                     # Bloom pre-filter: definitely-new candidates skip the
                     # exact join; only maybe-seen get the flag lookup
@@ -231,19 +250,11 @@ class FrontierCrawler:
                     ).unionByName(maybe.join(seen_side, "url", "left"))
                 else:
                     joined = cand.join(seen_side, "url", "left")
-                # ONE job per wave: candidate/dedup counts ride the frontier
-                # checkpoint as an Observation over the pre-filter join rows —
-                # no separate wide checkpoint and no extra count jobs
+                # ONE job per wave: the counts ride the frontier checkpoint
+                # as an Observation over the joined rows, above the Bloom
+                # split's two references to the candidate plan
                 obs = Observation(f"crawl_w{wave}")
-                fresh = (
-                    joined.observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n_cand"),
-                        F.sum(F.col("__seen").isNotNull().cast("long")).alias("n_dup"),
-                    )
-                    .where(F.col("__seen").isNull())
-                    .drop("__seen")
-                )
+                fresh = _fresh(joined, obs)
                 next_frontier = self._with_host(fresh, watermark)
                 # slim dedicated checkpoint: what stays alive across waves is
                 # only (url, rank, depth, host) per increment — the seen union
@@ -251,13 +262,12 @@ class FrontierCrawler:
                 # would compound sizeInBytes estimates 8x per wave (see util)
                 next_frontier = checkpoint_reset_stats(next_frontier)
                 got = obs.get
-                n_cand = int(got["n_cand"] or 0)
-                n_fresh = n_cand - int(got["n_dup"] or 0)
+                n_fresh = got["n"] - got["dup"]
                 m = {
                     "wave": wave,
-                    "candidates": n_cand,
-                    "deduped": n_cand - n_fresh,
-                    "robots_blocked": robots_blocked,
+                    "candidates": got["n"],
+                    "deduped": got["dup"],
+                    "robots_blocked": got["blocked"],
                     "enqueued": n_fresh,
                     "wall_s": round(time.time() - wave_t0, 3),
                 }
@@ -270,13 +280,10 @@ class FrontierCrawler:
                 increments.append(frontier)
                 if self.wait_ms > 0:
                     watermark = self._advance_watermark(frontier, watermark)
-                # append-only seen: new increment unioned/appended, prior
-                # increments are already stored — nothing is rewritten
                 seen = seen.unionByName(frontier.select("url"))
                 if self.store:
                     self.store.commit(wave, frontier, m)
                 wave += 1
-        visited = increments[0]
-        for inc in increments[1:]:
-            visited = visited.unionByName(inc)
-        return CrawlResult(visited=visited, seen=seen, waves=wave, metrics=metrics, frontier=frontier)
+        return CrawlResult(
+            visited=_union(increments), seen=seen, waves=wave, metrics=metrics, frontier=frontier
+        )

@@ -7,7 +7,9 @@ no matching rule means allowed.
 
 Scale shape: the rule table is small relative to the frontier → broadcast
 hash join (no shuffle of the candidate side); the longest-prefix selection
-is a window over the few matched rules per URL.
+is a window over the few matched rules per URL. `apply_robots` is lazy:
+the crawler runs it inside each wave's candidate plan and counts the
+blocked urls on the wave's own checkpoint.
 """
 
 from __future__ import annotations
@@ -53,28 +55,32 @@ def path_of(url_col):
 
 
 def apply_robots(candidates: DataFrame, rules: DataFrame, url_col: str = "url") -> DataFrame:
-    """Filter candidate URLs through a (host, prefix, allow) rule table.
+    """Flag candidate URLs through a (host, prefix, allow) rule table.
 
-    Returns the candidates with an `allowed` flag; crawl integration drops
-    `allowed = false` rows before the fetch stage (dedup-before-fetch and
-    robots-before-fetch both cut network cost, xidelbase.pas:1484-1491
-    analog).
+    Returns the candidates' own columns plus an `allowed` flag, one row per
+    url; the crawler drops `allowed = false` rows before the fetch stage
+    (dedup-before-fetch and robots-before-fetch both cut network cost,
+    xidelbase.pas:1484-1491 analog). The rule columns are renamed before
+    the join, so a candidate `host` column cannot collide with them. Lazy:
+    runs no Spark action.
     """
-    cand = candidates.withColumn("__host", host_of(F.col(url_col))).withColumn(
-        "__path", path_of(F.col(url_col))
+    rules = rules.select(
+        F.col("host").alias("__rhost"), F.col("prefix").alias("__prefix"),
+        F.col("allow").alias("__allow"),
     )
-    matched = cand.join(
+    url = F.col(url_col)
+    matched = candidates.join(
         F.broadcast(rules),
-        (cand["__host"] == rules["host"]) & cand["__path"].startswith(rules["prefix"]),
+        (host_of(url) == F.col("__rhost")) & path_of(url).startswith(F.col("__prefix")),
         "left",
     )
     # longest prefix wins; equal lengths tie-break to allow (the de-facto
     # standard: least-restrictive rule wins ties) — fully deterministic
     w = Window.partitionBy(url_col).orderBy(
-        F.length(F.col("prefix")).desc(), F.col("allow").desc()
+        F.length(F.col("__prefix")).desc(), F.col("__allow").desc()
     )
     return (
         matched.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
-        .select(url_col, F.coalesce(F.col("allow"), F.lit(True)).alias("allowed"))
+        .select(*candidates.columns, F.coalesce(F.col("__allow"), F.lit(True)).alias("allowed"))
     )

@@ -7,20 +7,20 @@ The reference resolves every followed link against the document base URI
 frontier dedup key: scheme/host lowercasing, dot-segment removal
 (RFC 3986 §5.2.4), default-port stripping, query-param ordering.
 
-Engines (tests/test_urlnorm.py pins them byte-equal), selected per session
-by the `xidel.urlnorm.engine` conf ('arrow' | 'expr' | 'auto'):
+Engines (tests/test_urlnorm.py pins them byte-equal); `canonicalize` and
+`resolve_url` pick one from the session's master (see `_engine`):
 
 1. `canonicalize_udf` / `resolve_udf` — Arrow-batched pandas UDF mapping a
    single compiled-regex ROW function (not column-vectorized pandas: one
    compiled-regex pass per row beats ten full-column .str passes on a
    memory-bandwidth-bound box — measured 0.8 s vs ~2 s / 2M dirty URLs).
-   Default on local masters.
+   Used on local masters.
 2. `canonicalize_expr` / `resolve_url_expr` — pure Catalyst, no Python
    boundary. Round-3 letless rework: substring-arithmetic skeleton +
    bounded regex-pass dot removal on the common path (~1.7 s / 2M dirty,
    was 18.9 s), with the exact `_let`/F.aggregate stack machine only
    behind a lazily-evaluated top-level branch for paths the passes can't
-   finish. Default off-box ('auto'): no per-candidate Python ser/de/GIL.
+   finish. Used on cluster masters: no per-candidate Python ser/de/GIL.
 3. `canonicalize_one` / `resolve_one` — the row functions (oracles).
 
 Known-slow shapes, kept out by measurement: `_let`-bound Catalyst
@@ -324,8 +324,8 @@ def canonicalize_expr(col: Column) -> Column:
     variant re-executes the substring/regex chains enough times to
     overwhelm codegen's instruction-level win; _let sharing beats
     whole-stage codegen ~3x on this workload. The Arrow row-map remains
-    ~2.5x faster at equal cores and stays the on-box default; this form
-    is the off-box/no-Python default (xidel.urlnorm.engine)."""
+    ~2.5x faster at equal cores and stays the local-master engine; this
+    form is the cluster-master, no-Python engine (see `_engine`)."""
     fast, needs = _canon_core(col, _dots_fast)
     slow, _ = _canon_core(col, lambda p: (_dots_cat(p), F.lit(False)))
     return F.when(needs, slow).otherwise(fast)
@@ -442,10 +442,8 @@ def host_of(url: Column) -> Column:
 
 
 def _engine() -> str:
-    """xidel.urlnorm.engine conf: 'arrow' | 'expr' | 'auto' (default).
-
-    auto → 'arrow' on local masters, 'expr' otherwise: the Arrow row-map
-    (a single compiled-regex pass per row) wins on one DRAM-bound box
+    """'arrow' on local masters, 'expr' otherwise: the Arrow row-map (a
+    single compiled-regex pass per row) wins on one DRAM-bound box
     (measured 0.8 s vs 1.7 s / 2M dirty URLs), but on a real cluster the
     Python-worker ser/de + GIL cost scales with every candidate while the
     pure-Catalyst form stays JVM-side — and after the round-3 letless
@@ -453,19 +451,14 @@ def _engine() -> str:
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
-    mode = "auto"
-    if spark is not None:
-        mode = spark.conf.get("xidel.urlnorm.engine", "auto")
-    if mode in ("arrow", "expr"):
-        return mode
     master = spark.conf.get("spark.master", "local") if spark is not None else "local"
     return "arrow" if master.startswith("local") else "expr"
 
 
 def canonicalize(col: Column) -> Column:
-    """Production canonicalization — engine chosen by `xidel.urlnorm.engine`
-    (see _engine). Tests pin the engines byte-equal; bench carries both
-    timings."""
+    """Production canonicalization — engine chosen from the session's
+    master (see _engine). Tests pin the engines byte-equal; bench carries
+    both timings."""
     return canonicalize_udf(col) if _engine() == "arrow" else canonicalize_expr(col)
 
 
