@@ -1,6 +1,22 @@
 import pytest
 
+from xidel_spark.queries_goldens import REF
 from xidel_spark.session import get_spark
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "needs_reference: reads the xidel reference checkout; skipped without it"
+    )
+
+
+def pytest_collection_modifyitems(items):
+    if REF.exists():
+        return
+    skip = pytest.mark.skip(reason="reference checkout absent")
+    for item in items:
+        if item.get_closest_marker("needs_reference"):
+            item.add_marker(skip)
 
 
 @pytest.fixture(scope="session")

@@ -248,6 +248,7 @@ def test_variable_assignment_extension(spark):
     assert names == ["t", "n"]
 
 
+@pytest.mark.needs_reference
 def test_reference_expression_acceptance():
     """coverage meter: the parser must accept >=70% of the reference's own
     -e/-extract/--xpath/--xquery test strings (tests/tests.sh), with
@@ -449,6 +450,7 @@ def test_empty_sequence_edges(spark):
         assert row[f"c{i}"] == want, f"{src!r}: want {want!r} got {row[f'c{i}']!r}"
 
 
+@pytest.mark.needs_reference
 def test_computed_constructors(spark):
     """computed element/attribute/text constructors serialize — byte-exact
     vs the reference golden linebreaksXMLElementNodes-NoDecl-NoIndent

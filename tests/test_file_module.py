@@ -16,8 +16,7 @@ import pytest
 REF = Path("/root/reference")
 SCRIPT = REF / "tests/tests-file-module.sh"
 
-pytestmark = pytest.mark.skipif(not SCRIPT.exists(),
-                                reason="reference checkout absent")
+pytestmark = pytest.mark.needs_reference
 
 EXCLUDED = {"file/current-dir-tests"}
 

@@ -33,39 +33,46 @@ def log_for(spark, docs, pattern, urls):
     return [per_doc[u] for u in urls]
 
 
+@pytest.mark.needs_reference
 def test_adhoc1_golden(spark, docs):
     (log,) = log_for(spark, docs, P_A, ["a.xml"])
     assert adhoc_lines(log) == G.joinpath("adhoc1").read_text().splitlines()
 
 
+@pytest.mark.needs_reference
 def test_adhoc3_golden(spark, docs):
     logs = log_for(spark, docs, P_TA, ["a.xml", "b.xml"])
     flat = [kv for log in logs for kv in log]
     assert adhoc_lines(flat) == G.joinpath("adhoc3").read_text().splitlines()
 
 
+@pytest.mark.needs_reference
 def test_json1_golden(spark, docs):
     logs = log_for(spark, docs, P_A, ["a.xml"])
     assert json_wrapped(logs) == G.joinpath("json1").read_text().strip()
 
 
+@pytest.mark.needs_reference
 def test_json3_golden(spark, docs):
     logs = log_for(spark, docs, P_TA, ["a.xml", "b.xml"])
     assert json_wrapped(logs) == G.joinpath("json3").read_text().strip()
 
 
+@pytest.mark.needs_reference
 def test_bash1_golden(spark, docs):
     logs = log_for(spark, docs, P_A, ["a.xml"])
     flat = [kv for log in logs for kv in log]
     assert bash_lines(flat) == G.joinpath("bash1").read_text().splitlines()
 
 
+@pytest.mark.needs_reference
 def test_bash3_golden(spark, docs):
     logs = log_for(spark, docs, P_TA, ["a.xml", "b.xml"])
     flat = [kv for log in logs for kv in log]
     assert bash_lines(flat) == G.joinpath("bash3").read_text().splitlines()
 
 
+@pytest.mark.needs_reference
 def test_cmd1_golden(spark, docs):
     """--output-format cmd (golden tests/output/cmd1): SET scalar + indexed
     + count lines, via the Catalyst cmd serializer."""
@@ -80,6 +87,7 @@ def test_cmd1_golden(spark, docs):
     assert got == G.joinpath("cmd1").read_text().splitlines()
 
 
+@pytest.mark.needs_reference
 def test_cmd2_golden(spark, docs):
     from xidel_spark.io.output import cmd_vars
 
@@ -107,6 +115,7 @@ def _anchor_nodes(spark, docs, urls):
     return spark.createDataFrame(rows, "tag string, ref string, text string")
 
 
+@pytest.mark.needs_reference
 def test_htmlraw1_golden(spark, docs):
     """--output-format html (golden tests/output/htmlraw1): outer-HTML per
     matched element inside the html/body wrapper."""
@@ -118,6 +127,7 @@ def test_htmlraw1_golden(spark, docs):
     assert got == G.joinpath("htmlraw1").read_text().splitlines()
 
 
+@pytest.mark.needs_reference
 def test_htmlraw2_golden(spark, docs):
     from xidel_spark.io.output import HTML_FOOTER, HTML_HEADER, html_wrapped
 
@@ -133,6 +143,7 @@ def _ref_golden(name):
     return Path("/root/reference/tests/output").joinpath(name).read_text()
 
 
+@pytest.mark.needs_reference
 def test_output_separator_goldens():
     """--output-separator/-header/-footer/-declaration byte-exact vs the
     reference goldens (tests/tests.sh:146,263-268): '(1,2)' -e 5 -e '""'
@@ -167,6 +178,7 @@ def test_output_encoding():
         encode_output("日本\n", "latin-1")
 
 
+@pytest.mark.needs_reference
 def test_assemble_document_distributed(spark):
     """the DataFrame assembly matches serialize_document byte-for-byte on
     the separator-xml golden, with ordering restored from an order column."""

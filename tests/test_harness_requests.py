@@ -6,6 +6,8 @@ primitives against refactors without spinning Spark."""
 
 from pathlib import Path
 
+import pytest
+
 from xidel_spark.harness.echo import BOUNDARY, HttpError, multipart_body, simulate_fetch
 from xidel_spark.harness.sim import Sim, _close_multi, _combine_multi
 
@@ -51,6 +53,7 @@ def test_catch_matching_matrix():
     assert not m("err:*", "http", "404") and m("pxp:*", "http", "404")
 
 
+@pytest.mark.needs_reference
 def test_echo_php_and_multipart_bytes():
     php = simulate_fetch({"url": "https://videlibri.sourceforge.net/xidelecho.php",
                           "method": "POST", "post": "123"}, REF)

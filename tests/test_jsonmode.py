@@ -22,6 +22,7 @@ def _one(spark, cols: list):
     return ["" if v is None else (str(v).lower() if isinstance(v, bool) else str(v)) for v in row]
 
 
+@pytest.mark.needs_reference
 @pytest.mark.parametrize("name", ["standard", "jsoniq", "deprecated", "unified"])
 def test_constructor_matrix_matches_golden(spark, name):
     """let $x := <a><b>c</b></a>//b, $o := {"a": (), "b": $x, "c": (1,2)},
@@ -66,6 +67,7 @@ def test_constructor_matrix_matches_golden(spark, name):
     assert got == expected, (name, got, expected)
 
 
+@pytest.mark.needs_reference
 @pytest.mark.parametrize("name,golden", [
     ("standard", "standard-null"), ("jsoniq", "jsoniq-null"),
     ("deprecated", "deprecated-null"), ("unified", "default-null"),
@@ -85,6 +87,7 @@ def test_null_matrix_matches_golden(spark, name, golden):
     assert got == expected, (name, got, expected)
 
 
+@pytest.mark.needs_reference
 @pytest.mark.parametrize("name,golden", [
     ("standard", "standard-literals"), ("jsoniq", "jsoniq-literals"),
     ("deprecated", "deprecated-literals"), ("unified", "default-literals"),
@@ -97,6 +100,7 @@ def test_literals_matrix_matches_golden(spark, name, golden):
     assert got == [l for l in expected if l != ""], (name, got, expected)
 
 
+@pytest.mark.needs_reference
 @pytest.mark.parametrize("name,golden", [
     ("standard", "standard-dotnotation"), ("jsoniq", "jsoniq-dotnotation"),
     ("deprecated", "deprecated-dotnotation"), ("unified", "default-dotnotation"),

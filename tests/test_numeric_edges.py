@@ -30,6 +30,7 @@ def golden(name):
     return GOLDEN_DIR.joinpath(name).read_text().strip().splitlines()
 
 
+@pytest.mark.needs_reference
 @pytest.mark.parametrize(
     "name,expr",
     [

@@ -50,6 +50,7 @@ def _golden(name):
     return Path("/root/reference/tests/output").joinpath(name).read_text().splitlines()
 
 
+@pytest.mark.needs_reference
 def test_nest9a_dfs_interleaving(spark, docs):
     """golden tests/output/nest9a: 'a.xml -f //a -e //title -f //a -e //title'
     — unbracketed chains process each followed doc DEPTH-FIRST with the
@@ -65,6 +66,7 @@ def test_nest9a_dfs_interleaving(spark, docs):
     assert [r["value"] for r in out.orderBy("ord").collect()] == _golden("nest9a")
 
 
+@pytest.mark.needs_reference
 def test_nest9b_bracket_scopes_follow(spark, docs):
     """golden nest9b: '[ -f //a -e //title -f //a ] -e //title' — the
     bracket's trailing follow is scoped away; the outer -e runs on the
@@ -84,6 +86,7 @@ def test_nest9b_bracket_scopes_follow(spark, docs):
     assert got == _golden("nest9b")
 
 
+@pytest.mark.needs_reference
 def test_nest9c_bracket_then_outer_extract(spark, docs):
     """golden nest9c: the bracketed nest9a chain, then -e //title on the
     pre-bracket context — AAA prints last."""

@@ -245,3 +245,64 @@ def test_wave_loop_join_strategies(spark, monkeypatch):
         assert "SortMergeJoin" not in p, p
     for p in relax:
         assert expand.search(p), p
+
+
+def test_waves_compile_nothing_once_warm(spark, tmp_path, monkeypatch):
+    """a wave's generated code is compiled once per crawl, not once per
+    wave: on a 10-level robots + politeness + store crawl, waves >= 4 add
+    no Janino compilation, and the same crawl run again adds none. The
+    rerun stops after the waves that compiled (0-3), which hold the whole
+    working set, to keep the test's time down.
+    With codegen stage ids in class names every wave recompiled, because
+    the seen union's one new child per wave renumbers every later stage
+    (session.CODEGEN_CONF). Spies on the crawler's frontier checkpoint the
+    way test_state.test_wave_actions_pinned spies on actions."""
+    from xidel_spark.crawl import crawler as crawler_mod
+    from xidel_spark.crawl.checkpoint import CrawlStateStore
+    from xidel_spark.crawl.crawler import FrontierCrawler
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    real = crawler_mod.checkpoint_reset_stats
+    at_wave = []
+
+    def spy(df, *args, **kwargs):
+        at_wave.append(compiles.getCount())
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(crawler_mod, "checkpoint_reset_stats", spy)
+
+    def url(level, j):
+        return f"http://h{j % 4}.test/l{level}/p{j}"
+
+    levels, width = 10, 10
+    rows = [
+        (url(lv, j), k, dst)
+        for lv in range(levels - 1)
+        for j in range(width)
+        for k, dst in enumerate([
+            url(lv + 1, j), url(lv + 1, (j + 7) % width),  # next level
+            url(max(lv - 1, 0), (j + 3) % width),  # back-link: a duplicate
+            f"http://h1.test/private/{lv}/{j}",  # robots-blocked
+        ])
+    ]
+    links = spark.createDataFrame(rows, "src string, idx int, dst string")
+    rules = spark.createDataFrame(
+        [(f"h{i}.test", "/", True) for i in range(4)] + [("h1.test", "/private/", False)],
+        "host string, prefix string, allow boolean",
+    )
+    seeds = [url(0, j) for j in range(width)]
+
+    def crawl(name, **kw):
+        at_wave.clear()
+        store = CrawlStateStore(str(tmp_path / name))
+        crawler = FrontierCrawler(spark, links, store=store, robots_rules=rules, wait_ms=250)
+        run = crawler.run(seeds, **kw)
+        at_wave.append(compiles.getCount())
+        return run, [b - a for a, b in zip(at_wave, at_wave[1:])]
+
+    run, per_wave = crawl("first")
+    assert run.waves == levels and len(per_wave) == levels + 1, run.metrics
+    assert per_wave[4:] == [0] * (len(per_wave) - 4), per_wave
+    _, again = crawl("again", max_waves=4)
+    assert len(again) == 4 and sum(again) == 0, again

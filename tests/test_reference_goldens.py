@@ -17,9 +17,7 @@ import pytest
 REF = Path("/root/reference")
 MANIFEST = json.loads((Path(__file__).parent / "golden_manifest.json").read_text())
 
-pytestmark = pytest.mark.skipif(
-    not (REF / "tests/tests.sh").exists(), reason="reference checkout absent"
-)
+pytestmark = pytest.mark.needs_reference
 
 
 def _cases():

@@ -31,6 +31,7 @@ def _eval_html(spark, html: str, expr: str, css: bool = False) -> list[str]:
 
 # --- reference goldens (parse-html + axes) ---------------------------------
 
+@pytest.mark.needs_reference
 def test_golden_regression_text1a(spark):
     # tests.sh:593  '<r><a>1</a><a>2</a></r>' -e ...{text()} per <a>
     assert _eval_html(spark, "<r><a>1</a><a>2</a></r>", "//a[1]/text()") == [
@@ -38,6 +39,7 @@ def test_golden_regression_text1a(spark):
     ]
 
 
+@pytest.mark.needs_reference
 def test_golden_regression_text1b(spark):
     # tests.sh:594 following-sibling::a/text() from the first <a> → '2'
     got = _eval_html(spark, "<r><a>1</a><a>2</a></r>", "//a[1]/following-sibling::a/text()")
@@ -50,6 +52,7 @@ def test_golden_regression_text1e_fragment_wrap(spark):
     assert got == ["2"]
 
 
+@pytest.mark.needs_reference
 def test_golden_entity_decoding(spark):
     # tests.sh:599-600: '&amp;' decodes once, '&amp;amp;' stays '&amp;'
     assert _eval_html(spark, "<a>&amp;</a>", "//a") == [
@@ -60,6 +63,7 @@ def test_golden_entity_decoding(spark):
     ]
 
 
+@pytest.mark.needs_reference
 def test_golden_doclocal_title(spark):
     # tests.sh:589: doc('tests/a.xml')//title → AAA, via parse_xml on the
     # reference's actual fixture file
@@ -212,6 +216,7 @@ def test_unsupported_selector_raises():
         compile_css("p::before")
 
 
+@pytest.mark.needs_reference
 def test_outer_xml_matches_inputformat_goldens(spark):
     """outer-xml(/) of parsed fragments vs goldens inputformatAutoA/C/Xml:
     html parsing wraps known-HTML fragments in <html><head/><body>…; auto

@@ -36,8 +36,12 @@ def main() -> None:
 
     from xidel_spark.crawl.checkpoint import CrawlStateStore
     from xidel_spark.crawl.crawler import FrontierCrawler
+    from xidel_spark.session import CODEGEN_CONF
 
-    spark = SparkSession.builder.appName("xidel_spark_crawl").getOrCreate()
+    # no master: spark-submit decides where the crawl runs
+    spark = (
+        SparkSession.builder.appName("xidel_spark_crawl").config(map=CODEGEN_CONF).getOrCreate()
+    )
 
     if args.demo:
         from xidel_spark import corpus

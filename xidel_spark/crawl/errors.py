@@ -6,11 +6,11 @@ keep processing), skip (drop the document), abort. Per-request overrides
 come from follow-object options (tests/tests.sh:128-129).
 
 Spark form: the policy is a tiny table → CASE expression over the fetch
-result's status column; retries re-enqueue with attempt+1 (bounded)."""
+result's status column."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 VALID_ACTIONS = {"retry", "ignore", "skip", "abort", "accept"}
@@ -43,33 +43,3 @@ def action_for(status: Column, policy: dict[str, str]) -> Column:
         expr = F.when(cond, v) if expr is None else expr.when(cond, v)
     default = F.when((status >= 200) & (status < 300), "accept").otherwise("skip")
     return expr.otherwise(default) if expr is not None else default
-
-
-def apply_policy(
-    fetched: DataFrame,
-    policy: dict[str, str],
-    *,
-    status_col: str = "status",
-    max_attempts: int = 3,
-) -> dict[str, DataFrame]:
-    """Split fetch results by action:
-    - 'accepted': flow to extraction (ignore → body nulled)
-    - 'retry': re-enqueue (attempt+1, dropped past max_attempts)
-    - 'dropped': skip/abort rows (abort also raises driver-side if present)
-    """
-    tagged = fetched.withColumn("__action", action_for(F.col(status_col), policy))
-    accepted = tagged.where(F.col("__action").isin("accept", "ignore")).withColumn(
-        "body",
-        F.when(F.col("__action") == "ignore", F.lit(None).cast("string")).otherwise(
-            F.col("body") if "body" in fetched.columns else F.lit(None).cast("string")
-        ),
-    ).drop("__action")
-    attempt = F.col("attempt") if "attempt" in fetched.columns else F.lit(0)
-    retry = (
-        tagged.where(F.col("__action") == "retry")
-        .withColumn("attempt", attempt + 1)
-        .where(F.col("attempt") < max_attempts)
-        .drop("__action")
-    )
-    dropped = tagged.where(F.col("__action").isin("skip", "abort")).drop("__action")
-    return {"accepted": accepted, "retry": retry, "dropped": dropped}

@@ -209,13 +209,3 @@ def extract_kind_text(docs: DataFrame, selector: str, url_col: str = "doc_id") -
     return docs.select(
         F.col(url_col).alias("url"), F.posexplode(vals).alias("idx", "value")
     )
-
-
-def extract_values(docs: DataFrame, selector: str, nodes_col: str, url_col: str = "doc_id") -> DataFrame:
-    """(url, idx, value) over an existing node-array column (parse_html_nodes
-    output) — extraction for tree-parsed documents."""
-    sel = compile_selector(selector)
-    vals = sel.values(F.col(nodes_col))
-    return docs.select(
-        F.col(url_col).alias("url"), F.posexplode(vals).alias("idx", "value")
-    )
